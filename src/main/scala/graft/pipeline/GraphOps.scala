@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.reasoner.Reasoner.RoundCheckpointOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Distributed graph analytics over edge lists (beyond-reference: the
   * reference reasons over the RDF graph but has no whole-graph
@@ -140,20 +141,31 @@ object GraphOps {
     val und = fwd.unionByName(fwd.select(col("u").as("v"), col("v").as("u")))
       .distinct().repartition(col("u")).localCheckpointSevered()
     // convergence check: labels are node ids that only ever DECREASE, so
-    // Σ lbl strictly decreases whenever any vertex changed and the
-    // fixpoint is "sum unchanged". r12: the sum rides the checkpoint's
-    // own materialization job (exact integer sum, long accumulation with
-    // BigInteger promotion — the same value the old
-    // `sum(cast(lbl as decimal(38,0)))` scan computed in a SECOND action
-    // per round over the already-materialized blocks). lbl is ordinal 1
-    // of the (v, lbl) frame and non-null by construction.
-    def ckWithSum(df: DataFrame): (DataFrame, BigInt) = {
-      val (ck, _, s) = org.apache.spark.sql.graft.CheckpointBridge
-        .localCheckpointSeveredCountSum(df, sumOrdinal = 1)
-      (ck, s)
+    // for integral ids Σ lbl strictly decreases whenever any vertex
+    // changed and the fixpoint is "sum unchanged"; the exact sum rides
+    // the checkpoint's own materialization job. lbl is ordinal 1 of the
+    // (v, lbl) frame and non-null by construction. Other id types
+    // (strings, fractions) have no exact order-preserving sum: they count
+    // the changed labels with a join instead.
+    val integralIds = und.schema("u").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
     }
-    var (lbl, prevSum) = ckWithSum(
-      und.groupBy("v").agg(least(min(col("u")), col("v")).as("lbl")))
+    var lastSum = Option.empty[BigInt]
+    def checkpointAndConverged(prev: Option[DataFrame], df: DataFrame): (DataFrame, Boolean) =
+      if (integralIds) {
+        val (ck, _, s) = org.apache.spark.sql.graft.CheckpointBridge
+          .localCheckpointSeveredCountSum(df, sumOrdinal = 1)
+        val same = lastSum.contains(s)
+        lastSum = Some(s)
+        (ck, same)
+      } else {
+        val ck = df.localCheckpointSevered()
+        (ck, prev.exists(p => ck.select(col("v"), col("lbl").as("nl")).join(p, Seq("v"))
+          .filter(col("nl") =!= col("lbl")).isEmpty))
+      }
+    var lbl = checkpointAndConverged(None,
+      und.groupBy("v").agg(least(min(col("u")), col("v")).as("lbl")))._1
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -163,14 +175,13 @@ object GraphOps {
         .select(col("v"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
       // pointer jump: lbl'(v) = min(lbl(v), lbl(lbl(v))) — labels are
       // node ids of the same component, so the shortcut stays in-component
-      val (next, nextSum) = ckWithSum(stepped.as("a")
+      val (next, same) = checkpointAndConverged(Some(lbl), stepped.as("a")
         .join(stepped.select(col("v").as("lbl"), col("lbl").as("lbl2")).as("b"),
           Seq("lbl"), "left_outer")
         .select(col("v"), least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl")))
+      converged = same
       graft.reasoner.Reasoner.unpersistCheckpoint(lbl)
       lbl = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
       round += 1
       graft.reasoner.Reasoner.maybeReclaimShuffles(round)
     }

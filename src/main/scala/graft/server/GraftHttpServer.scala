@@ -7,7 +7,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import graft.model.QuadStore
+import graft.model.{LocalJoinFold, QuadStore}
 import graft.rdfio.RdfIO
 import graft.reasoner.Reasoner
 import graft.sparql.{Compiler, SparqlParser}
@@ -68,6 +68,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
 
   private val mapper = new ObjectMapper()
   private var server: HttpServer = _
+  LocalJoinFold.install(spark)
 
   /** The server's standing dataset: the provided base store, or one
     * lasting empty store so standard-protocol updates (below) persist for
@@ -346,7 +347,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
             val term = b.putObject(c)
             if (v.startsWith("_:")) {
               term.put("type", "bnode"); term.put("value", v.substring(2))
-            } else if (v.matches("[A-Za-z][A-Za-z0-9+.\\-]*:\\S*") &&
+            } else if (GraftHttpServer.IriLike.matcher(v).matches() &&
                 (v.contains("://") || v.startsWith("urn:") || v.startsWith("mailto:"))) {
               term.put("type", "uri"); term.put("value", v)
             } else {
@@ -740,4 +741,7 @@ object GraftHttpServer {
   /** Serializes the state-store-provider conf set/start/restore across
     * concurrent session registrations. */
   private val streamStartLock = new Object
+
+  /** A results cell that reads as an absolute IRI (`scheme:rest`). */
+  private val IriLike = java.util.regex.Pattern.compile("[A-Za-z][A-Za-z0-9+.\\-]*:\\S*")
 }

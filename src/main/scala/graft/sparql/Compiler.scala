@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{QuadStore, TermLex}
+import scala.jdk.CollectionConverters._
 import Ast._
 
 /** SPARQL algebra → DataFrame compiler.
@@ -284,8 +285,7 @@ class Compiler(store: QuadStore,
       case ValuesElem(vars, rows) =>
         val schema = StructType(vars.map(v => StructField(v, StringType, nullable = true)))
         val data = rows.map(r => Row(r.map(_.map(TermLex.lexical).orNull): _*))
-        val vdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(data, 1), schema)
+        val vdf = spark.createDataFrame(data.asJava, schema)
         val hasUndef = vars.zipWithIndex
           .filter { case (_, i) => rows.exists(r => r(i).isEmpty) }.map(_._1).toSet
         val vb = Bindings(vdf, hasUndef)
@@ -1116,7 +1116,7 @@ class Compiler(store: QuadStore,
       Row(g match { case GraphIri(i) => i; case _ => null },
         lex(tp.s), lex(tp.p), lex(tp.o))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), QuadStore.schema)
+    spark.createDataFrame(rows.asJava, QuadStore.schema)
   }
 
   /** Instantiate template quads from a binding snapshot; solutions leaving

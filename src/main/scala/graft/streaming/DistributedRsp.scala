@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ExpiredTimerInfo}
 import graft.model.TermLex
+import scala.jdk.CollectionConverters._
 import graft.sparql.Ast._
 
 /** Distributed RSP data plane (SURVEY §3.3 "Spark shape"): the
@@ -616,8 +617,7 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
             org.apache.spark.sql.types.StringType, nullable = true)))
         val data = vrows.map(r => org.apache.spark.sql.Row(
           r.map(_.map(graft.model.TermLex.lexical).orNull): _*))
-        val vdf = broadcast(spark.createDataFrame(
-          spark.sparkContext.parallelize(data.toSeq, 1), schema))
+        val vdf = broadcast(spark.createDataFrame(data.asJava, schema))
         val undef = vars.zipWithIndex.filter { case (_, i) =>
           vrows.exists(_(i).isEmpty)
         }.map(_._1).toSet

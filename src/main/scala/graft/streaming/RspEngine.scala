@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.QuadStore
+import scala.jdk.CollectionConverters._
+import graft.model.{LocalJoinFold, QuadStore}
 import graft.sparql.Ast._
 import graft.sparql.{Compiler, SparqlParser}
 
@@ -20,6 +21,15 @@ import graft.sparql.{Compiler, SparqlParser}
   * solution modifiers). High-volume aggregation-only pipelines should use
   * the watermark/window path in [[StreamOps]] instead; this engine is the
   * full-semantics path (exact emission sequences, R2S diffs, policies).
+  *
+  * Firings over local content run on the driver with no Spark job: the
+  * window content and the cached window results are `LocalRelation`s,
+  * and the [[graft.model.LocalJoinFold]] rule the constructor installs
+  * folds their joins at planning time, so each collect is a local table
+  * scan. The rule folds only under its fixed bound on the row pairs a
+  * join compares (`LocalJoinFold.MaxRows`); a larger window, a static store read from
+  * files, rule enrichment or a cross-window closure still plans
+  * Spark jobs, with the same results.
   *
   * Firing rule (validated against `rsp_engine_test.rs:10-193`): windows
   * close at multiples of STEP; an event at time t fires the max close c
@@ -108,6 +118,7 @@ class RspEngine(
   import RspEngine._
 
   RspEngine.requireExecutableTicks(query)
+  LocalJoinFold.install(spark)
 
   private case class WindowRuntime(
       spec: WindowSpec,
@@ -409,8 +420,7 @@ class RspEngine(
       else windows.map { w =>
         val schema = org.apache.spark.sql.types.StructType(w.latestCols.map(c =>
           org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType, nullable = true)))
-        Compiler.Bindings(spark.createDataFrame(
-          spark.sparkContext.parallelize(w.latest.get, 1), schema), Set.empty)
+        Compiler.Bindings(spark.createDataFrame(w.latest.get.asJava, schema), Set.empty)
       }
     val anyStore = staticStore.getOrElse(QuadStore.empty(spark))
     val c = new Compiler(anyStore)

@@ -155,25 +155,34 @@ object CheckpointBridge {
     (ck, agg)
   }
 
-  /** Severed checkpoint + row count + exact integer sum of one LONG
-    * column, all in ONE action — the connected-components convergence
-    * shape (Σ label strictly decreases until the fixpoint). The sum is
-    * exact at any scale: per-partition accumulation runs in a plain
-    * `long` and promotes to BigInteger on overflow, so the result equals
-    * the old `sum(cast(lbl as decimal(38,0)))` bit-for-bit (both are the
-    * exact integer sum). The column must be non-null (`sumOrdinal` is a
-    * schema ordinal of `df`). */
+  /** Severed checkpoint + row count + exact integer sum of one integral
+    * (Long, Int, Short or Byte) column, all in ONE action — the
+    * connected-components convergence shape (Σ label strictly decreases
+    * until the fixpoint). The sum is exact at any scale: it accumulates
+    * in BigInteger, so the result equals `sum(cast(lbl as decimal(38,0)))`
+    * (both are the exact integer sum). Narrow columns are read with
+    * their own accessor, which sign-extends: an UnsafeRow stores them
+    * zero-extended in an 8-byte word, so `getLong` would read int -1 as
+    * 4294967295. Any other column type is refused. The column must be
+    * non-null (`sumOrdinal` is a schema ordinal of `df`). */
   def localCheckpointSeveredCountSum(df: DataFrame,
       sumOrdinal: Int): (DataFrame, Long, BigInt) = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val read: InternalRow => Long = df.schema(sumOrdinal).dataType match {
+      case LongType => _.getLong(sumOrdinal)
+      case IntegerType => _.getInt(sumOrdinal).toLong
+      case ShortType => _.getShort(sumOrdinal).toLong
+      case ByteType => _.getByte(sumOrdinal).toLong
+      case t => throw new IllegalArgumentException(
+        s"localCheckpointSeveredCountSum: column $sumOrdinal is $t, not an integral type")
+    }
     val (ck, (n, s)) = localCheckpointSeveredAgg[(Long, java.math.BigInteger)](
       df, (0L, java.math.BigInteger.ZERO),
       { case ((n0, big0), row) =>
-          // functional on the outside; the hot path is the long add with
-          // an overflow promote (the tuple alloc per row is the price of
-          // the shared generic interface — convergence scans are a tiny
-          // fraction of a round's join work)
-          val v = row.getLong(sumOrdinal)
-          (n0 + 1L, big0.add(java.math.BigInteger.valueOf(v)))
+          // the tuple alloc per row is the price of the shared generic
+          // interface — convergence scans are a tiny fraction of a
+          // round's join work
+          (n0 + 1L, big0.add(java.math.BigInteger.valueOf(read(row))))
       },
       { case ((n1, b1), (n2, b2)) => (n1 + n2, b1.add(b2)) })
     (ck, n, BigInt(s))

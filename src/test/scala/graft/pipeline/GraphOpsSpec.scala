@@ -111,6 +111,44 @@ class GraphOpsSpec extends SparkSpec {
     assert(got.length == 200 && got.forall(_._2 == 0L))
   }
 
+  /** Component = minimum id reachable over the undirected edges. */
+  private def bruteComponents[T](es: Seq[(T, T)])(implicit o: Ordering[T]): Map[T, T] = {
+    val adj = (es ++ es.map(_.swap)).filter(e => e._1 != e._2).groupBy(_._1)
+      .map { case (v, ns) => v -> ns.map(_._2) }
+    adj.keys.map { v =>
+      var seen = Set(v); var frontier = Set(v)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+        seen ++= frontier
+      }
+      v -> seen.min
+    }.toMap
+  }
+
+  test("connected components: String ids (41-node path plus a separate pair)") {
+    // equal-length names: a label change never changes the string's
+    // length, which is all a raw 8-byte read of the field can see
+    val path = (0 until 40).map(i => (f"n$i%02d", f"n${i + 1}%02d"))
+    val es = path :+ ("x01" -> "x00")
+    val got = GraphOps.connectedComponents(es.toDF("src", "dst"))
+      .as[(String, String)].collect().toMap
+    assert(got.size == 43)
+    assert(got == bruteComponents(es))
+  }
+
+  test("connected components: Int ids with negatives") {
+    // the first round moves node 1's label from 0 to -1, which a
+    // zero-extended read of the Int sees as a rise of 2^32 - 1; the other
+    // components' labels fall by exactly that much in the same round, so
+    // a sum over such reads would stop one round early
+    val path = 5 +: (1 to 5).map(1000000000 + _)
+    val es = Seq((1, 0), (0, -1)) ++ path.zip(path.tail) ++
+      Seq((2147483601, 2147483600), (2147483600, 852516299), (7, 7))
+    val got = GraphOps.connectedComponents(es.toDF("src", "dst"))
+      .as[(Int, Int)].collect().toMap
+    assert(got == bruteComponents(es))
+  }
+
   test("bfs distances: min hops, depth bound, unreachable absent") {
     //  0-1-2-3-4 path plus a detached pair 10-11
     val es = ((0L until 4L).map(i => (i, i + 1)) :+ (10L, 11L)).toDF("src", "dst")

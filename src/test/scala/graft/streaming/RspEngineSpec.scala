@@ -470,4 +470,73 @@ class RspEngineSpec extends SparkSpec {
     // static triples alone never satisfy the WINDOW block
     assert(!e.emissions.flatMap(_.rows).exists(_.get("sensor").contains("http://test/sensor2")))
   }
+
+  test("http_rsp_smoke query: firings over local window content run no Spark job") {
+    val step = 3600000L
+    val range = 7200000L
+    // 3 events per tick, one tick each 15 minutes over 12 hours; every
+    // third event a purchase
+    val events = (0 until 48).flatMap { t =>
+      val ts = 1700000000000L + t * 900000L + 7L
+      (0 until 3).map { k =>
+        val n = t * 3 + k
+        (ts, s"event/$n", s"user/${n % 5}", if (n % 3 == 0) "purchase" else "view")
+      }
+    }
+    val e = RspEngineBuilder.fromQuery(spark, s"""
+      REGISTER RSTREAM <http://out/windowed> AS
+      SELECT *
+      FROM NAMED WINDOW :w ON :events [RANGE $range ms STEP $step ms]
+        WITH POLICY steal
+      WHERE { WINDOW :w { ?e <ev/user> ?u . ?e <ev/type> "purchase" . } }""")
+    // the firings run on this thread: its job group scopes the count to
+    // them, whatever else runs on the shared SparkContext
+    val sc = spark.sparkContext
+    val group = "rsp-engine-spec-firings"
+    val marker = "rsp-engine-spec-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("spark.job.description") == marker)) markerSeen = true
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, null)
+    try {
+      events.foreach { case (ts, ev, u, ty) =>
+        e.add("events", ev, "ev/user", u, ts)
+        e.add("events", ev, "ev/type", ty, ts)
+      }
+      // listener events arrive in order: once the marker job is seen,
+      // every job the firings started has been counted
+      sc.setJobGroup(group, marker)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the same firing rule, evaluated directly over the feed
+    val firstTs = events.head._1
+    var lastFired = Option.empty[Long]
+    val expected = events.map(_._1).distinct.flatMap { t =>
+      val c = DistributedRsp.maxCloseLong(t, step)
+      if (c >= firstTs && lastFired.forall(c > _)) {
+        lastFired = Some(c)
+        Some(c -> events.filter { case (ts, _, _, ty) =>
+          ts >= c - range && ts <= c && ty == "purchase"
+        }.map { case (_, ev, u, _) => Map("e" -> ev, "u" -> u) }.toSet)
+      } else None
+    }
+    assert(expected.size >= 10)
+    assert(e.emissions.map(em => em.windowClose -> em.rows.toSet) == expected)
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs over ${expected.size} firings")
+  }
 }
