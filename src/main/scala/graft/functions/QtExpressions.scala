@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -61,11 +62,16 @@ object QtComponent {
   }
 
   /** Register the three decomposition functions in the session's registry
-    * (idempotent; the public route to a custom Expression as a Column). */
+    * (the public route to a custom Expression as a Column). Once per
+    * session: a name the registry already holds — from an earlier call or
+    * the extensions route — is left as it is, so every `Compiler`
+    * construction and quoted rule scan that calls this neither replaces
+    * the builders nor logs a replacement warning. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     names.zipWithIndex.foreach { case (n, i) =>
-      registry.createOrReplaceTempFunction(n, builder(i), "built-in")
+      if (!registry.functionExists(FunctionIdentifier(n)))
+        registry.createOrReplaceTempFunction(n, builder(i), "built-in")
     }
   }
 

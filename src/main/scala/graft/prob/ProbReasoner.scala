@@ -257,9 +257,7 @@ object ProbReasoner {
     * reappears among any rule's premise predicates would grow the lineage
     * cone unboundedly. */
   private def checkNonRecursive(rules: Seq[Rule]): Unit = {
-    def constPred(t: Term): Option[String] = t match {
-      case Iri(v) => Some(v); case Lit(v) => Some(v); case _ => None
-    }
+    import graft.reasoner.RuleBody.constPred
     val heads = rules.flatMap(_.conclusion).map(tp => constPred(tp.p))
     val premises = rules.flatMap(r => r.premise ++ r.negativePremise).map(tp => constPred(tp.p))
     val recursive = heads.exists(h => h.isEmpty || premises.exists(p => p.isEmpty || p == h))

@@ -3,9 +3,9 @@ package graft.reasoner
 import graft.reasoner.Reasoner.RoundCheckpointOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
-import graft.model.TermLex
+import graft.model.QuadStore
 import graft.sparql.Ast._
+import graft.sparql.Compiler
 
 /** Annotated (semiring) Datalog: facts carry a numeric tag combined with
   * ⊗ across a rule's premises and ⊕ across alternative derivations — the
@@ -68,31 +68,21 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
   @volatile var lastConverged: Boolean = true
   @volatile var lastRounds: Int = 0
 
-  private def termVars(t: Term): Seq[String] = t match {
-    case Var(n) => Seq(n)
-    case Quoted(s, p, o) => termVars(s) ++ termVars(p) ++ termVars(o)
-    case _ => Nil
-  }
+  private lazy val condCompiler = new Compiler(QuadStore.empty(spark))
 
-  /** Scan carrying the tag as a uniquely-named column. */
-  private def scan(facts: DataFrame, tp: TriplePattern, tagAs: String): DataFrame = {
-    var filters = List.empty[Column]
-    var binds = List.empty[(String, Column)]
-    def walk(c: Column, t: Term): Unit = t match {
-      case Var(n) => binds ::= (n -> c)
-      case other => filters ::= (c === lit(TermLex.lexical(other)))
-    }
-    walk(col("s"), tp.s); walk(col("p"), tp.p); walk(col("o"), tp.o)
-    val grouped = binds.reverse.groupBy(_._1)
-    val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
-    val filtered = (filters ++ eqs).foldLeft(facts)((d, f) => d.filter(f))
-    filtered.select(grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq :+
-      col("tag").as(tagAs): _*)
-  }
+  /** Premise i of a rule body carries its fact's tag as `__tag$i`. */
+  private def carryTag(i: Int): Seq[Column] = Seq(col("tag").as(s"__tag$i"))
+  private def premiseTags(rule: Rule): Seq[Column] =
+    rule.premise.indices.map(i => col(s"__tag$i"))
 
-  private def joinBindings(l: DataFrame, r: DataFrame): DataFrame = {
-    val shared = l.columns.filter(c => r.columns.contains(c) && !c.startsWith("__tag"))
-    if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared.toSeq, "inner")
+  /** ⊗ of a derivation's contributing tags. */
+  private def product(tags: Seq[Column]): Column =
+    if (tags.size == 1) tags.head else semiring.times(tags)
+
+  /** ⊕ of the tags per fact (per `keys` + fact). */
+  private[reasoner] def plusBy(df: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    val by = keys ++ Seq("s", "p", "o")
+    df.groupBy(by.head, by.tail: _*).agg(semiring.plusAgg(col("tag")).as("tag"))
   }
 
   /** One rule application: derived head facts tagged ⊗(premise tags),
@@ -100,39 +90,20 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     * delta relation (provenance semi-naive, `provenance_semi_naive.rs:
     * 38-90` find_premise_solutions over delta triggers). */
   def applyRule(facts: DataFrame, rule: Rule,
-      delta: Option[(Int, DataFrame)] = None): DataFrame = {
-    val scans = rule.premise.zipWithIndex.map { case (tp, i) =>
-      val src = delta match {
-        case Some((di, d)) if di == i => d
-        case _ => facts
-      }
-      scan(src, tp, s"__tag$i")
-    }
-    var b = scans.reduce(joinBindings)
-    rule.negativePremise.foreach { ntp =>
-      val neg = scan(facts, ntp, "__tagn").drop("__tagn")
-      val shared = b.columns.filter(neg.columns.contains(_)).toSeq
-      b = if (shared.isEmpty) b.join(broadcast(neg.limit(1)), lit(true), "left_anti")
-          else b.join(neg, shared, "left_anti")
-    }
-    val tagCols = rule.premise.indices.map(i => col(s"__tag$i"))
-    val tagged = b.withColumn("tag",
-      if (tagCols.size == 1) tagCols.head else semiring.times(tagCols))
-    def termCol(t: Term): Column = t match {
-      case Var(n) => if (tagged.columns.contains(n)) col(n) else lit(null).cast(StringType)
-      case other => lit(TermLex.lexical(other))
-    }
-    rule.conclusion.map { tp =>
-      tagged.select(termCol(tp.s).as("s"), termCol(tp.p).as("p"),
-          termCol(tp.o).as("o"), col("tag"))
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
-    }.reduce(_ unionByName _)
-      .groupBy("s", "p", "o").agg(semiring.plusAgg(col("tag")).as("tag"))
+      delta: Option[(Int, DataFrame)] = None): DataFrame =
+    applyKeyedRule(facts, rule, delta, Nil)
+
+  /** [[applyRule]] with `keys` riding every scan, join and ⊕ merge — the
+    * cross-window plane's `step`. */
+  private[reasoner] def applyKeyedRule(facts: DataFrame, rule: Rule,
+      delta: Option[(Int, DataFrame)], keys: Seq[String]): DataFrame = {
+    val b = RuleBody.body(rule, facts, delta, condCompiler.compileCond, keys, carryTag)
+    val tagged = b.withColumn("tag", product(premiseTags(rule)))
+    plusBy(RuleBody.head(rule, tagged, keys.map(col) :+ col("tag")), keys)
   }
 
   /** ⊕-merge two tagged fact sets. */
-  def merge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy("s", "p", "o").agg(semiring.plusAgg(col("tag")).as("tag"))
+  def merge(a: DataFrame, b: DataFrame): DataFrame = plusBy(a.unionByName(b))
 
   /** Annotated fixpoint. Two regimes, matching ⊕'s algebra:
     *
@@ -163,8 +134,7 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     val (negRules, posRules) = rules.partition(_.negativePremise.nonEmpty)
     val closed =
       if (posRules.nonEmpty) materialize(facts0, posRules, maxRounds)
-      else facts0.groupBy("s", "p", "o")
-        .agg(semiring.plusAgg(col("tag")).as("tag")).localCheckpoint()
+      else plusBy(facts0).localCheckpoint()
     if (negRules.isEmpty) closed
     else {
       val derived = negRules.map(r => negativePass(closed, r)).reduce(merge)
@@ -175,7 +145,7 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
   }
 
   /** One rule's negative-stratum pass (`provenance_semi_naive.rs:297-385`):
-    * bind the positive premises, then for each negated atom — ground once
+    * bind the positive premises (filters applied), then for each negated atom — ground once
     * the binding instantiates it — contribute ⊖(tag) when the fact is
     * present and ⊤ when absent; the conclusion tag is the ⊗ of premise
     * tags and NAF contributions, zero-tag conclusions dropped. */
@@ -183,12 +153,10 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     val negF = semiring.negate.getOrElse(throw new IllegalArgumentException(
       "this semiring has no exact negation (Provenance::negate); " +
         "use materialize()'s anti-join NAF instead"))
-    val scans = rule.premise.zipWithIndex.map { case (tp, i) =>
-      scan(facts, tp, s"__tag$i")
-    }
-    var b = scans.reduce(joinBindings)
+    var b = RuleBody.body(rule.copy(negativePremise = Nil), facts, None,
+      condCompiler.compileCond, payload = carryTag)
     val contribs = rule.negativePremise.zipWithIndex.map { case (ntp, j) =>
-      val negScan = scan(facts, ntp, s"__ntag$j")
+      val negScan = RuleBody.scan(facts, ntp, Seq(col("tag").as(s"__ntag$j")))
       val shared = negScan.columns.filter(c => c != s"__ntag$j").toSeq
       // safety (`provenance_semi_naive.rs:356-359`): a variable in a
       // negated atom must be bound by the positive premises
@@ -201,31 +169,14 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
       when(col(s"__ntag$j").isNotNull, negF(col(s"__ntag$j")))
         .otherwise(semiring.one)
     }
-    val tagCols = rule.premise.indices.map(i => col(s"__tag$i")) ++ contribs
-    val tagged = b.withColumn("tag",
-        if (tagCols.size == 1) tagCols.head else semiring.times(tagCols))
+    val tagged = b.withColumn("tag", product(premiseTags(rule) ++ contribs))
       .filter(col("tag") =!= semiring.zero)
-    def termCol(t: Term): Column = t match {
-      case Var(n) => if (tagged.columns.contains(n)) col(n) else lit(null).cast(StringType)
-      case other => lit(TermLex.lexical(other))
-    }
-    rule.conclusion.map { tp =>
-      tagged.select(termCol(tp.s).as("s"), termCol(tp.p).as("p"),
-          termCol(tp.o).as("o"), col("tag"))
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
-    }.reduce(_ unionByName _)
-      .groupBy("s", "p", "o").agg(semiring.plusAgg(col("tag")).as("tag"))
+    plusBy(RuleBody.head(rule, tagged, Seq(col("tag"))))
   }
-
-  /** See [[Reasoner.broadcastDeltaMaxRows]] — localCheckpoint erases the
-    * stats Catalyst needs to broadcast a small frontier on its own. */
-  private val broadcastDeltaMaxRows = 1000000L
 
   private def materializeSemiNaive(facts0: DataFrame, rules: Seq[Rule],
       maxRounds: Int): DataFrame = {
-    val debug = sys.env.contains("GRAFT_REASONER_DEBUG")
-    var facts = facts0.groupBy("s", "p", "o")
-      .agg(semiring.plusAgg(col("tag")).as("tag")).localCheckpointSevered()
+    var facts = plusBy(facts0).localCheckpointSevered()
 
     // Strategy choice, mirroring [[Reasoner.materializeSemiNaive]]: a
     // transitive-closure rule shape over a closed semiring is evaluated by
@@ -234,30 +185,13 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     if (enableDoubling && semiring.doublingSafe)
       Reasoner.transitiveShape(rules).foreach { sh =>
         if (facts.filter(col("p") === sh.head).isEmpty) {
-          if (debug) println(s"[annotated] strategy=semiring-doubling(edge=${sh.edge}, head=${sh.head})")
           val closure = closureByDoubling(
             facts.filter(col("p") === sh.edge).select("s", "o", "tag"),
-            maxRounds, debug)
+            maxRounds)
           return facts.unionByName(
             closure.select(col("s"), lit(sh.head).as("p"), col("o"), col("tag")))
         }
       }
-
-    // Dead delta positions (as in the plain reasoner): when every rule head
-    // has a constant predicate, a delta fact after round 0 can only carry a
-    // head predicate, so premise positions with a constant non-head
-    // predicate never match the delta.
-    def constPred(t: Term): Option[String] = t match {
-      case Iri(v) => Some(v); case Lit(v) => Some(v); case _ => None
-    }
-    val headPreds: Option[Set[String]] = {
-      val ps = rules.flatMap(_.conclusion).map(tp => constPred(tp.p))
-      if (ps.forall(_.isDefined)) Some(ps.flatten.toSet) else None
-    }
-    def deltaCanMatch(tp: TriplePattern): Boolean = (headPreds, constPred(tp.p)) match {
-      case (Some(hp), Some(p)) => hp.contains(p)
-      case _ => true
-    }
 
     var delta = facts
     var deltaRows = -1L // unknown on round 0 (delta = all seeds)
@@ -267,14 +201,10 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     lastConverged = true
     while (round < maxRounds) {
       lastRounds = round
-      val tRound = System.nanoTime()
-      val smallDelta = deltaRows >= 0 && deltaRows <= broadcastDeltaMaxRows
-      val perPosition = rules.flatMap { r =>
-        val deltaSide = if (smallDelta && r.premise.size > 1) broadcast(delta) else delta
-        r.premise.indices
-          .filter(i => round == 0 || deltaCanMatch(r.premise(i)))
-          .map(i => applyRule(facts, r, Some((i, deltaSide))))
-      }
+      // dead delta positions and the broadcast frontier, as in the plain
+      // reasoner (RuleBody.deltaPositions)
+      val perPosition = RuleBody.deltaPositions(rules, round, delta, deltaRows)
+        .map { case (r, d) => applyRule(facts, r, Some(d)) }
       if (perPosition.isEmpty) return facts
       val derived = perPosition.reduce(merge)
       // improvement join (the D_new criterion): keep facts that are new or
@@ -299,7 +229,6 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
               (all + 1L, if (row.getBoolean(4)) rt + 1L else rt) },
           { case ((a1, r1), (a2, r2)) => (a1 + a2, r1 + r2) })
       deltaRows = dn
-      if (debug) println(f"[annotated] round $round: delta=$deltaRows, ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       if (deltaRows == 0) return facts
       delta = improvedCk.select("s", "p", "o", "tag")
       // insert-only fast path: when no existing fact was re-tagged (the
@@ -334,15 +263,13 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
     * T_k(a,c) ⊕ ⊕_b T_k(a,b) ⊗ T_k(b,c) — each round one self-join plus
     * one ⊕-groupBy over the closure so far, converged when no pair is new
     * and no tag changed. Valid for closed semirings ([[Semiring.doublingSafe]]). */
-  private def closureByDoubling(edges: DataFrame, maxRounds: Int,
-      debug: Boolean): DataFrame = {
+  private def closureByDoubling(edges: DataFrame, maxRounds: Int): DataFrame = {
     var t = edges.groupBy("s", "o")
       .agg(semiring.plusAgg(col("tag")).as("tag")).localCheckpointSevered()
     var round = 0
     lastConverged = false
     while (round < math.min(maxRounds, 64)) {
       lastRounds = round
-      val tRound = System.nanoTime()
       val hop = t.as("l").join(t.as("r"), col("l.o") === col("r.s"))
         .select(col("l.s").as("s"), col("r.o").as("o"),
           semiring.times(Seq(col("l.tag"), col("r.tag"))).as("tag"))
@@ -368,7 +295,6 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
         org.apache.spark.sql.graft.CheckpointBridge.localCheckpointSeveredAgg[Long](
           next, 0L,
           (c, row) => if (row.getBoolean(3)) c + 1L else c, _ + _)
-      if (debug) println(f"[annotated] doubling round $round: changed=$changed, ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       // the previous round's checkpoint blocks are dead once `next` is
       // materialized; dropping them eagerly (instead of waiting for the
       // weak-ref ContextCleaner, which rarely fires on a mostly-idle
@@ -385,8 +311,7 @@ class AnnotatedReasoner(spark: SparkSession, semiring: Semiring,
 
   private def materializeJacobi(facts0: DataFrame, rules: Seq[Rule],
       maxRounds: Int): DataFrame = {
-    val base = facts0.groupBy("s", "p", "o")
-      .agg(semiring.plusAgg(col("tag")).as("tag")).localCheckpointSevered()
+    val base = plusBy(facts0).localCheckpointSevered()
     var facts = base
     var round = 0
     var changed = true

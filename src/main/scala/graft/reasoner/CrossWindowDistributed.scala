@@ -1,20 +1,18 @@
 package graft.reasoner
 
 import graft.reasoner.Reasoner.RoundCheckpointOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
-import graft.model.TermLex
 import graft.sparql.Ast._
 
 /** Cross-window SDS+ on step-keyed DataFrames — the distributed plane for
   * [[CrossWindowReasoner]] (`datalog/src/cross_window_sds.rs:16-120`
   * semantics): instead of one driver-paced materialization per engine
   * step, ALL steps' live closures are computed in one fixpoint whose
-  * every round is a distributed rule pass with the step riding every
-  * join key — the same close-keyed formulation as
-  * [[graft.streaming.DistributedRsp]]'s R2R enrichment, extended with
-  * the expiration-semiring tag (⊗ = min across premises, ⊕ = max across
+  * every round is a distributed rule pass: the [[AnnotatedReasoner]] rule
+  * application over the [[RuleBody]] compiler with `step` carried as a
+  * key on every scan, join, NAF anti-join and ⊕ merge, under the
+  * expiration semiring (⊗ = min across premises, ⊕ = max across
   * derivations; a derived fact lives while its weakest support lives).
   *
   * Visibility matches the engine walkthrough: a fact fed at step i with
@@ -28,66 +26,6 @@ import graft.sparql.Ast._
   */
 object CrossWindowDistributed {
 
-  private val semiring = Semiring.expiration
-
-  private def termVars(t: Term): Seq[String] = t match {
-    case Var(n) => Seq(n)
-    case Quoted(s, p, o) => termVars(s) ++ termVars(p) ++ termVars(o)
-    case _ => Nil
-  }
-
-  /** Pattern scan over `(step, s, p, o, tag)` facts: constants filter,
-    * variables project, step + tag ride along. */
-  private def scanK(facts: DataFrame, tp: TriplePattern, tagAs: String): DataFrame = {
-    var filters = List.empty[Column]
-    var binds = List.empty[(String, Column)]
-    def walk(c: Column, t: Term): Unit = t match {
-      case Var(n) => binds ::= (n -> c)
-      case other => filters ::= (c === lit(TermLex.lexical(other)))
-    }
-    walk(col("s"), tp.s); walk(col("p"), tp.p); walk(col("o"), tp.o)
-    val grouped = binds.reverse.groupBy(_._1)
-    val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
-    val filtered = (filters ++ eqs).foldLeft(facts)((d, f) => d.filter(f))
-    filtered.select(grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq ++
-      Seq(col("step"), col("tag").as(tagAs)): _*)
-  }
-
-  private def joinK(l: DataFrame, r: DataFrame): DataFrame = {
-    val shared = l.columns.filter(c => r.columns.contains(c) && !c.startsWith("__tag"))
-    l.join(r, shared.toSeq, "inner") // step is always shared
-  }
-
-  private def mergeK(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy("step", "s", "p", "o")
-      .agg(semiring.plusAgg(col("tag")).as("tag"))
-
-  /** One rule application across all steps: premise scans joined on
-    * (step, shared vars), step-scoped NAF anti-joins, derived tag =
-    * ⊗(premise tags), ⊕-merged per (step, fact). */
-  private def applyRuleK(facts: DataFrame, rule: Rule): DataFrame = {
-    val scans = rule.premise.zipWithIndex.map { case (tp, i) => scanK(facts, tp, s"__tag$i") }
-    var b = scans.reduce(joinK)
-    rule.negativePremise.foreach { ntp =>
-      val neg = scanK(facts, ntp, "__tagn").drop("__tagn")
-      val shared = b.columns.filter(neg.columns.contains(_)).toSeq
-      b = b.join(neg, shared, "left_anti")
-    }
-    val tagCols = rule.premise.indices.map(i => col(s"__tag$i"))
-    val tagged = b.withColumn("tag",
-      if (tagCols.size == 1) tagCols.head else semiring.times(tagCols))
-    def termCol(t: Term): Column = t match {
-      case Var(n) => if (tagged.columns.contains(n)) col(n) else lit(null).cast(StringType)
-      case other => lit(TermLex.lexical(other))
-    }
-    rule.conclusion.map { tp =>
-      tagged.select(col("step"), termCol(tp.s).as("s"), termCol(tp.p).as("p"),
-          termCol(tp.o).as("o"), col("tag"))
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
-    }.reduce(_ unionByName _)
-      .groupBy("step", "s", "p", "o").agg(semiring.plusAgg(col("tag")).as("tag"))
-  }
-
   /** Materialize every step's live closure at once.
     *
     * @param steps   `(step: long, now: long)` — one row per engine step
@@ -100,6 +38,12 @@ object CrossWindowDistributed {
   def materializeSteps(steps: DataFrame, content: DataFrame, rules: Seq[Rule],
       alphaMs: Long, staticFacts: Option[DataFrame] = None,
       maxRounds: Int = 32): DataFrame = {
+    val reasoner = new AnnotatedReasoner(steps.sparkSession, Semiring.expiration)
+    def mergeK(a: DataFrame, b: DataFrame): DataFrame =
+      reasoner.plusBy(a.unionByName(b), Seq("step"))
+    // one rule pass across all steps, ⊕-merged per (step, fact)
+    def pass(facts: DataFrame): DataFrame =
+      rules.map(reasoner.applyKeyedRule(facts, _, None, Seq("step"))).reduce(mergeK)
     val tagged = content.select(col("step").as("__src"), col("s"), col("p"), col("o"),
       (col("event_time") + lit(alphaMs)).cast("double").as("tag"))
     // visibility + expiry pushed into the explode join: a fact reaches a
@@ -110,8 +54,7 @@ object CrossWindowDistributed {
     val static = staticFacts.map(sf => steps.select("step").distinct()
       .crossJoin(broadcast(sf.select(col("s"), col("p"), col("o"),
         lit(Double.MaxValue).as("tag")))))
-    var facts = static.fold(visible)(visible.unionByName(_))
-      .groupBy("step", "s", "p", "o").agg(semiring.plusAgg(col("tag")).as("tag"))
+    var facts = reasoner.plusBy(static.fold(visible)(visible.unionByName(_)), Seq("step"))
       .localCheckpointSevered()
     // a NON-recursive rule set needs exactly ruleChainDepth rounds — run
     // them without the per-round convergence action (each action is a
@@ -120,15 +63,14 @@ object CrossWindowDistributed {
     graft.streaming.DistributedRsp.ruleChainDepth(rules) match {
       case Some(depth) =>
         (0 until depth).foreach { _ =>
-          facts = mergeK(facts, rules.map(applyRuleK(facts, _)).reduce(mergeK))
-            .localCheckpointSevered()
+          facts = mergeK(facts, pass(facts)).localCheckpointSevered()
         }
         return facts
       case None => () // recursive: fall through to the checked fixpoint
     }
     var round = 0
     while (round < maxRounds) {
-      val derived = rules.map(applyRuleK(facts, _)).reduce(mergeK)
+      val derived = pass(facts)
       // tag-improvement convergence (cycle-safe): a derivation only
       // counts as new when it strictly ⊕-improves the known tag
       val improved = derived.join(

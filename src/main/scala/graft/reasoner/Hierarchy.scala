@@ -1,7 +1,7 @@
 package graft.reasoner
 
 import graft.reasoner.Reasoner.RoundCheckpointOps
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sparql.Ast._
@@ -24,10 +24,11 @@ import graft.sparql.Ast._
   * apply ONCE, non-recursively, over the UNION of the dependency levels'
   * facts, mirroring the reference's single application pass — including
   * its two-premise i ≠ j guard (the same fact row may not match both
-  * premises, `reasoning_experimental.rs:185-210`), which is why the
-  * cross-level path scans with fact identity retained instead of calling
-  * [[Reasoner.evalBody]]. Premise arity > 2 is refused loudly exactly
-  * where the reference prints "Unsupported rule premise length".
+  * premises, `reasoning_experimental.rs:185-210`): each premise's
+  * [[RuleBody.scan]] carries the matched fact as `__f*` columns, which
+  * never join, and the guard compares them. Premise arity > 2 is refused
+  * loudly exactly where the reference prints "Unsupported rule premise
+  * length".
   */
 object Hierarchy {
 
@@ -144,26 +145,19 @@ class ReasoningHierarchy(spark: SparkSession) {
   private def applyRuleOnce(rule: Rule, pool: DataFrame): DataFrame = {
     require(rule.negativePremise.isEmpty && rule.filters.isEmpty,
       "cross-level rules carry positive premises only (as in the reference)")
+    def withIdentity(tp: TriplePattern, i: Int): DataFrame = RuleBody.scan(pool, tp,
+      Seq("s", "p", "o").map(c => col(c).as(s"__f$i$c")))
     val bindings = rule.premise match {
-      case Seq(tp) => reasoner.scan(pool, tp)
+      case Seq(tp) => RuleBody.scan(pool, tp)
       case Seq(tp1, tp2) =>
-        val l = reasoner.scan(pool.select(col("s"), col("p"), col("o"),
-          col("s").as("__f1s"), col("p").as("__f1p"), col("o").as("__f1o")), tp1,
-          keep = Seq("__f1s", "__f1p", "__f1o"))
-        val r = reasoner.scan(pool.select(col("s"), col("p"), col("o"),
-          col("s").as("__f2s"), col("p").as("__f2p"), col("o").as("__f2o")), tp2,
-          keep = Seq("__f2s", "__f2p", "__f2o"))
-        val shared = l.columns.filter(r.columns.contains(_)).toSeq
-          .filterNot(_.startsWith("__f"))
-        val joined =
-          if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared, "inner")
-        joined.filter(!(col("__f1s") === col("__f2s") &&
+        RuleBody.joinOnShared(withIdentity(tp1, 1), withIdentity(tp2, 2))
+          .filter(!(col("__f1s") === col("__f2s") &&
             col("__f1p") === col("__f2p") && col("__f1o") === col("__f2o")))
           .drop("__f1s", "__f1p", "__f1o", "__f2s", "__f2p", "__f2o")
       case ps => throw new IllegalArgumentException(
         s"unsupported cross-level rule premise length ${ps.length} (reference supports 1-2)")
     }
-    reasoner.instantiateHead(rule, bindings).distinct()
+    RuleBody.head(rule, bindings).distinct()
   }
 
   /** All facts, or one level's, optionally constrained on s/p/o —

@@ -1,10 +1,11 @@
 package graft.reasoner
 
 import graft.reasoner.Reasoner.RoundCheckpointOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.reasoner.RuleBody.constPred
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.model.{QuadStore, TermLex}
+import graft.model.QuadStore
 import graft.sparql.Ast._
 import graft.sparql.Compiler
 
@@ -17,10 +18,11 @@ import graft.sparql.Compiler
   * Execution model: each rule premise is a pattern scan over the facts
   * DataFrame joined on shared variables (the reference's
   * `perform_hash_join_for_rules`, `shared/src/join_algorithm.rs:64-265`,
-  * becomes a plain equi-join Catalyst plans as broadcast/SMJ). The
-  * fixpoint loop runs on the driver; every round `localCheckpoint`s the
-  * accumulated facts to truncate plan lineage (SURVEY §7.4.2), so a
-  * 10K-deep taxonomy closure doesn't build a 10K-node logical plan.
+  * becomes a plain equi-join Catalyst plans as broadcast/SMJ), compiled by
+  * [[RuleBody]] with no carried columns. The fixpoint loop runs on the
+  * driver; every round `localCheckpoint`s the accumulated facts to
+  * truncate plan lineage (SURVEY §7.4.2), so a 10K-deep taxonomy closure
+  * doesn't build a 10K-node logical plan.
   *
   * Semi-naive: per round, for each rule and each positive premise
   * position i, evaluate with premise i bound to Δ and the rest to the
@@ -72,17 +74,29 @@ object Reasoner {
       ckRoundCounted(df)
   }
 
-  /** Run two independent Spark actions CONCURRENTLY (guide §2.6 "overlap
-    * independent jobs"): `fb` on a pool thread while `fa` runs on the
-    * caller's thread; returns both. Actions are only sequential because
-    * driver code calls them sequentially — inside a fixpoint round the
-    * R-advance and the J-square read the SAME immutable checkpoints and
-    * write different ones, so overlapping them cuts the driver-paced
-    * wall to max(tA, tB) without touching what either computes. */
-  def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
+  /** Run two independent checkpoint-and-count actions CONCURRENTLY (guide
+    * §2.6 "overlap independent jobs"): `fb` on a pool thread while `fa`
+    * runs on the caller's thread; returns both. Actions are only
+    * sequential because driver code calls them sequentially — inside a
+    * fixpoint round the R-advance and the J-square read the SAME immutable
+    * checkpoints and write different ones, so overlapping them cuts the
+    * driver-paced wall to max(tA, tB) without touching what either
+    * computes. When either side fails, the other side is awaited and its
+    * checkpoint blocks dropped before the failure rethrows: a detached job
+    * must not outlive the call and keep its blocks cached. */
+  def inParallel(fa: => (DataFrame, Long),
+      fb: => (DataFrame, Long)): ((DataFrame, Long), (DataFrame, Long)) = {
     val fut = scala.concurrent.Future(fb)(scala.concurrent.ExecutionContext.global)
-    val a = fa
-    (a, scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf))
+    def awaitB() = scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf)
+    val a = try fa catch { case e: Throwable =>
+      scala.util.Try(awaitB()).foreach { case (df, _) => unpersistCheckpoint(df) }
+      throw e
+    }
+    val b = try awaitB() catch { case e: Throwable =>
+      unpersistCheckpoint(a._1)
+      throw e
+    }
+    (a, b)
   }
 
   /** Long fixpoints also leak shuffle FILES: ContextCleaner deletes a
@@ -115,14 +129,14 @@ object Reasoner {
     * rule takes. */
   final case class TransitiveShape(edge: String, head: String)
 
+  /** The variable name at a pattern position (shape matching). */
+  private def v(t: Term): Option[String] =
+    t match { case Var(n) => Some(n); case _ => None }
+
   /** Recognize the transitive-closure shape, or None when the rules need
     * the general fixpoint. Ignores PROB annotations (the semiring engine
     * does its own gating on the ⊕/⊗ algebra). */
   def transitiveShape(rules: Seq[Rule]): Option[TransitiveShape] = {
-    def v(t: Term): Option[String] =
-      t match { case Var(n) => Some(n); case _ => None }
-    def c(t: Term): Option[String] =
-      t match { case Iri(x) => Some(x); case Lit(x) => Some(x); case _ => None }
     if (rules.size != 2) return None
     if (rules.exists(r => r.filters.nonEmpty || r.negativePremise.nonEmpty ||
         r.conclusion.size != 1)) return None
@@ -130,15 +144,15 @@ object Reasoner {
     if (bases.size != 1 || steps.size != 1 || steps.head.premise.size != 2) return None
     val (base, step) = (bases.head, steps.head)
     for {
-      e <- c(base.premise.head.p)
-      h <- c(base.conclusion.head.p)
+      e <- constPred(base.premise.head.p)
+      h <- constPred(base.conclusion.head.p)
       if e != h
       bx <- v(base.premise.head.s); by <- v(base.premise.head.o)
       cx <- v(base.conclusion.head.s); cy <- v(base.conclusion.head.o)
       if bx == cx && by == cy && bx != by
-      p1 <- c(step.premise(0).p); p2 <- c(step.premise(1).p)
+      p1 <- constPred(step.premise(0).p); p2 <- constPred(step.premise(1).p)
       if Set(p1, p2).subsetOf(Set(e, h)) && (p1 == h || p2 == h)
-      if c(step.conclusion.head.p).contains(h)
+      if constPred(step.conclusion.head.p).contains(h)
       ax <- v(step.premise(0).s); ay <- v(step.premise(0).o)
       mx <- v(step.premise(1).s); mz <- v(step.premise(1).o)
       sx <- v(step.conclusion.head.s); sz <- v(step.conclusion.head.o)
@@ -160,10 +174,6 @@ object Reasoner {
   final case class TypePropagationShape(typePred: String, subPred: String)
 
   def typePropagationShape(rules: Seq[Rule]): Option[TypePropagationShape] = {
-    def v(t: Term): Option[String] =
-      t match { case Var(n) => Some(n); case _ => None }
-    def c(t: Term): Option[String] =
-      t match { case Iri(x) => Some(x); case Lit(x) => Some(x); case _ => None }
     if (rules.size != 1) return None
     val r = rules.head
     if (r.filters.nonEmpty || r.negativePremise.nonEmpty ||
@@ -171,9 +181,9 @@ object Reasoner {
     // accept either premise order
     Seq(r.premise, r.premise.reverse).flatMap { case Seq(pT, pS) =>
       for {
-        ty <- c(pT.p); sub <- c(pS.p)
+        ty <- constPred(pT.p); sub <- constPred(pS.p)
         if ty != sub
-        if c(r.conclusion.head.p).contains(ty)
+        if constPred(r.conclusion.head.p).contains(ty)
         x <- v(pT.s); cc <- v(pT.o)
         cs <- v(pS.s); d <- v(pS.o)
         if cc == cs && Set(x, cc, d).size == 3
@@ -185,100 +195,14 @@ object Reasoner {
 }
 
 class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
-  graft.functions.QtComponent.register(spark)
 
-  private def tripleSchema = StructType(Seq(
-    StructField("s", StringType, nullable = false),
-    StructField("p", StringType, nullable = false),
-    StructField("o", StringType, nullable = false)))
+  private lazy val condCompiler = new Compiler(QuadStore.empty(spark))
 
-  private def emptyTriples: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tripleSchema)
-
-  // ---- pattern machinery over a plain (s,p,o) facts DF -------------------
-
-  private def termVars(t: Term): Seq[String] = t match {
-    case Var(n) => Seq(n)
-    case Quoted(s, p, o) => termVars(s) ++ termVars(p) ++ termVars(o)
-    case _ => Nil
-  }
-
-  /** Scan one premise pattern over `facts`: constants filter, vars
-    * project. `keep` carries extra non-variable columns through the
-    * projection (the hierarchical cross-level path keeps the matched
-    * fact's identity for its i ≠ j guard). */
-  def scan(facts: DataFrame, tp: TriplePattern, keep: Seq[String] = Nil): DataFrame = {
-    var filters = List.empty[Column]
-    var binds = List.empty[(String, Column)]
-    def walk(c: Column, t: Term): Unit = t match {
-      case Var(n) => binds ::= (n -> c)
-      case Iri(v) => filters ::= (c === lit(v))
-      case Lit(v) => filters ::= (c === lit(v))
-      case q @ Quoted(s, p, o) =>
-        if (termVars(q).isEmpty) filters ::= (c === lit(TermLex.lexical(q)))
-        else {
-          filters ::= Compiler.qtIs(c)
-          walk(Compiler.qtS(c), s); walk(Compiler.qtP(c), p); walk(Compiler.qtO(c), o)
-        }
-      case b: BNode => filters ::= (c === lit(TermLex.lexical(b)))
-    }
-    walk(col("s"), tp.s); walk(col("p"), tp.p); walk(col("o"), tp.o)
-    val grouped = binds.reverse.groupBy(_._1)
-    val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
-    val filtered = (filters ++ eqs).foldLeft(facts)((d, f) => d.filter(f))
-    filtered.select(grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq ++
-      keep.map(col): _*)
-  }
-
-  private def joinBindings(l: DataFrame, r: DataFrame): DataFrame = {
-    val shared = l.columns.filter(r.columns.contains(_)).toSeq
-    if (shared.isEmpty) l.crossJoin(r) else l.join(r, shared, "inner")
-  }
-
-  /** Evaluate one rule body: positive premises (with `deltaAt` optionally
-    * binding premise i to the delta), then NAF anti-joins, then filters.
-    * Returns the variable bindings DF. */
-  def evalBody(rule: Rule, facts: DataFrame, delta: Option[(Int, DataFrame)],
-      cond: (DataFrame, Condition) => Column): DataFrame = {
-    val scans = rule.premise.zipWithIndex.map { case (tp, i) =>
-      val src = delta match {
-        case Some((di, d)) if di == i => d
-        case _ => facts
-      }
-      scan(src, tp)
-    }
-    var b = scans.reduce(joinBindings)
-    // stratified negation: drop bindings matching any negative premise
-    rule.negativePremise.foreach { ntp =>
-      val neg = scan(facts, ntp)
-      val shared = b.columns.filter(neg.columns.contains(_)).toSeq
-      b = if (shared.isEmpty) {
-        // ground negative premise: keep all rows iff no match exists
-        b.join(broadcast(neg.limit(1)), lit(true), "left_anti")
-      } else b.join(neg, shared, "left_anti")
-    }
-    rule.filters.foreach(f => b = b.filter(cond(b, f)))
-    b
-  }
-
-  /** Instantiate rule conclusions from bindings → derived (s,p,o) facts. */
-  def instantiateHead(rule: Rule, bindings: DataFrame): DataFrame = {
-    def termCol(t: Term): Column = t match {
-      case Var(n) =>
-        if (bindings.columns.contains(n)) col(n) else lit(null).cast(StringType)
-      case Quoted(s, p, o) => Compiler.qtMake(termCol(s), termCol(p), termCol(o))
-      case other => lit(TermLex.lexical(other))
-    }
-    rule.conclusion.map { tp =>
-      bindings.select(termCol(tp.s).as("s"), termCol(tp.p).as("p"), termCol(tp.o).as("o"))
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
-    }.reduce(_ unionByName _)
-  }
-
-  private def defaultCond(df: DataFrame, c: Condition): Column = {
-    val store = QuadStore.empty(spark)
-    new Compiler(store).compileCond(df, c)
-  }
+  /** One rule's derived `(s, p, o)` facts ([[RuleBody]] with no carried
+    * columns). */
+  private def derive(rule: Rule, facts: DataFrame,
+      delta: Option[(Int, DataFrame)]): DataFrame =
+    RuleBody.head(rule, RuleBody.body(rule, facts, delta, condCompiler.compileCond))
 
   /** Naive fixpoint: apply all rules to all facts until no new facts. */
   def materializeNaive(facts0: DataFrame, rules: Seq[Rule],
@@ -287,9 +211,7 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     var round = 0
     var changed = true
     while (changed && round < maxRounds) {
-      val derived = rules.map { r =>
-        instantiateHead(r, evalBody(r, facts, None, defaultCond))
-      }.reduce(_ unionByName _)
+      val derived = rules.map(derive(_, facts, None)).reduce(_ unionByName _)
       // checkpoint + convergence count fused into one action (r12)
       val (next, n) = facts.unionByName(derived).distinct().localCheckpointSeveredCounted()
       // eagerly drop the superseded round's blocks — the weak-ref
@@ -303,12 +225,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     }
     facts
   }
-
-  /** Broadcast the delta into premise joins when it has at most this many
-    * rows. `localCheckpoint` erases size stats (the LogicalRDD reports
-    * `defaultSizeInBytes`), so Catalyst/AQE would never pick a broadcast
-    * join on its own even when the frontier is a few thousand rows. */
-  private val broadcastDeltaMaxRows = 1000000L
 
   /** Semi-naive fixpoint (`semi_naive.rs:10-92`): per round only join the
     * delta in each premise position. The standard recursive-Datalog
@@ -327,23 +243,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     * joins, making each round shuffle-free on the facts side. */
   def materializeSemiNaive(facts0: DataFrame, rules: Seq[Rule],
       maxRounds: Int = 1000): DataFrame = {
-    def constPred(t: Term): Option[String] = t match {
-      case Iri(v) => Some(v)
-      case Lit(v) => Some(v)
-      case _ => None
-    }
-    // Some(set) iff every conclusion predicate is constant — only then can
-    // we bound what predicates a delta fact may carry.
-    val headPreds: Option[Set[String]] = {
-      val ps = rules.flatMap(_.conclusion).map(tp => constPred(tp.p))
-      if (ps.forall(_.isDefined)) Some(ps.flatten.toSet) else None
-    }
-    def deltaCanMatch(tp: TriplePattern): Boolean = (headPreds, constPred(tp.p)) match {
-      case (Some(hp), Some(p)) => hp.contains(p)
-      case _ => true
-    }
-
-    val debug = sys.env.contains("GRAFT_REASONER_DEBUG")
     var facts = facts0.select("s", "p", "o").distinct().localCheckpointSevered()
 
     // Strategy choice (optimizer-style — same declarative rules, different
@@ -356,20 +255,18 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     // per-round data volume, is the fixpoint bottleneck on a cluster.
     if (enableDoubling) Reasoner.transitiveShape(rules).foreach { sh =>
       if (facts.filter(col("p") === sh.head).isEmpty) {
-        if (debug) println(s"[reasoner] strategy=recursive-doubling(edge=${sh.edge}, head=${sh.head})")
         val closure = closureByDoubling(
-          facts.filter(col("p") === sh.edge).select("s", "o"), maxRounds, debug)
+          facts.filter(col("p") === sh.edge).select("s", "o"), maxRounds)
         return facts.unionByName(
           closure.select(col("s"), lit(sh.head).as("p"), col("o")))
       }
     }
 
     if (enableDoubling) Reasoner.typePropagationShape(rules).foreach { sh =>
-      if (debug) println(s"[reasoner] strategy=type-propagation-doubling(type=${sh.typePred}, sub=${sh.subPred})")
       val closure = typeClosureByDoubling(
         facts.filter(col("p") === sh.typePred).select("s", "o"),
         facts.filter(col("p") === sh.subPred).select("s", "o"),
-        maxRounds, debug)
+        maxRounds)
       return facts.unionByName(
           closure.select(col("s"), lit(sh.typePred).as("p"), col("o")))
         .distinct()
@@ -387,19 +284,12 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     // checkpoints (except the live one feeding the next round's join) are
     // dead at that point and dropped eagerly.
     val ckEvery = 64
+    val headPreds = RuleBody.headPreds(rules)
     var lastFactsCk: DataFrame = null
     var foldedDeltas = List.empty[DataFrame]
     while (round < maxRounds) {
-      val tRound = System.nanoTime()
-      val smallDelta = deltaRows >= 0 && deltaRows <= broadcastDeltaMaxRows
-      val perPosition = rules.flatMap { r =>
-        // hint only when the rule actually joins (a dangling hint on a
-        // single-premise rule just warns)
-        val deltaSide = if (smallDelta && r.premise.size > 1) broadcast(delta) else delta
-        r.premise.indices
-          .filter(i => round == 0 || deltaCanMatch(r.premise(i)))
-          .map(i => instantiateHead(r, evalBody(r, facts, Some((i, deltaSide)), defaultCond)))
-      }
+      val perPosition = RuleBody.deltaPositions(rules, round, delta, deltaRows)
+        .map { case (r, d) => derive(r, facts, Some(d)) }
       if (perPosition.isEmpty) return facts
       val derived = perPosition.reduce(_ unionByName _)
       // Only head-predicate facts can collide with the derivations.
@@ -414,7 +304,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
         .distinct().localCheckpointSeveredCounted()
       delta = d
       deltaRows = dn
-      if (debug) println(f"[reasoner] round $round: delta=$deltaRows, ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       if (deltaRows == 0) return facts
       facts = facts.unionByName(delta)
       foldedDeltas ::= delta
@@ -440,8 +329,7 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     * rounds. Each round is one self-equi-join + distinct on the closure
     * so far; the total shuffle volume is O(|closure| · log depth), and the
     * round count — the driver-paced part — is logarithmic. */
-  private def closureByDoubling(edges: DataFrame, maxRounds: Int,
-      debug: Boolean): DataFrame = {
+  private def closureByDoubling(edges: DataFrame, maxRounds: Int): DataFrame = {
     // Re-materializing the full closure each round is deliberate: a
     // delta-only variant (anti-join new pairs, closure as a lazy union of
     // checkpointed deltas) measured no faster — the squaring self-join
@@ -452,7 +340,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     var (t, n) = edges.distinct().localCheckpointSeveredCounted()
     var round = 0
     while (round < math.min(maxRounds, 64)) {
-      val tRound = System.nanoTime()
       val hop = t.as("l").join(t.as("r"), col("l.o") === col("r.s"))
         .select(col("l.s").as("s"), col("r.o").as("o"))
       // checkpoint + convergence count fused into one action (r12)
@@ -460,7 +347,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
       // drop the superseded round's blocks (AnnotatedReasoner hygiene)
       Reasoner.unpersistCheckpoint(t)
       t = next
-      if (debug) println(f"[reasoner] doubling round $round: pairs=$n2, ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       if (n2 == n) return t
       n = n2
       round += 1
@@ -496,7 +382,7 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     * DeepTaxonomyProbe records wall time + rounds at depths 10..10K
     * (BASELINE.md row 2 parity). */
   private def typeClosureByDoubling(types: DataFrame, sub: DataFrame,
-      maxRounds: Int, debug: Boolean): DataFrame = {
+      maxRounds: Int): DataFrame = {
     // r12: each round used to pay FOUR sequential blocking actions
     // (R checkpoint, R count, J checkpoint, J count). Two moves, results
     // untouched: (1) checkpoint + count fuse into ONE action
@@ -512,7 +398,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
       sub.distinct().localCheckpointSeveredCounted())
     var round = 0
     while (round < math.min(maxRounds, 64) && jn > 0) {
-      val tRound = System.nanoTime()
       val stepped = r.as("l").join(j.as("r"), col("l.o") === col("r.s"))
         .select(col("l.s").as("s"), col("r.o").as("o"))
       val ((nextR, n2), (jj, jn2)) = Reasoner.inParallel(
@@ -522,7 +407,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
           .distinct().localCheckpointSeveredCounted())
       Reasoner.unpersistCheckpoint(r)
       r = nextR
-      if (debug) println(f"[reasoner] type-doubling round $round: typed=$n2, jumps=$jn, ${(System.nanoTime() - tRound) / 1e9}%.2f s")
       if (n2 == n) {
         Reasoner.unpersistCheckpoint(j); Reasoner.unpersistCheckpoint(jj)
         return r
@@ -550,9 +434,6 @@ class Reasoner(spark: SparkSession, enableDoubling: Boolean = true) {
     * between checkpointing thousands of rows and millions per round. */
   def materialize(store: QuadStore, rules: Seq[Rule],
       semiNaive: Boolean = true): QuadStore = {
-    def constPred(t: Term): Option[String] = t match {
-      case Iri(v) => Some(v); case Lit(v) => Some(v); case _ => None
-    }
     val referenced = rules.flatMap(r =>
       (r.premise ++ r.negativePremise ++ r.conclusion).map(tp => constPred(tp.p)))
     val allFacts = store.quads.filter(col("g").isNull).select("s", "p", "o")

@@ -1,6 +1,7 @@
 package graft.sparql
 
 import graft.reasoner.Reasoner.RoundCheckpointOps
+import graft.reasoner.RuleBody.termVars
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -348,11 +349,6 @@ class Compiler(store: QuadStore,
 
   // ---- BGP ---------------------------------------------------------------
 
-  private def termVars(t: Term): Seq[String] = t match {
-    case Var(n) => Seq(n)
-    case Quoted(s, p, o) => termVars(s) ++ termVars(p) ++ termVars(o)
-    case _ => Nil
-  }
   private def patternVars(tp: TriplePattern): Seq[String] =
     termVars(tp.s) ++ termVars(tp.p) ++ termVars(tp.o)
 

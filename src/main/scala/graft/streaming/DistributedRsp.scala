@@ -1,11 +1,12 @@
 package graft.streaming
 
 import graft.reasoner.Reasoner.RoundCheckpointOps
+import graft.reasoner.RuleBody
+import graft.reasoner.RuleBody.joinOnShared
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ExpiredTimerInfo}
-import graft.model.TermLex
 import scala.jdk.CollectionConverters._
 import graft.sparql.Ast._
 
@@ -83,7 +84,7 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     val terms = (r.premise ++ r.negativePremise ++ r.conclusion)
       .flatMap(tp => Seq(tp.s, tp.p, tp.o))
     require(!terms.exists {
-      case q: Quoted => termVarsOf(q).nonEmpty
+      case q: Quoted => RuleBody.termVars(q).nonEmpty
       case _ => false
     }, "distributed enrichment supports ground quoted terms only")
   }
@@ -127,14 +128,14 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
   }
 
   private def blockVars(elems: Seq[Element]): Seq[String] = elems.flatMap {
-    case Bgp(ps) => ps.flatMap(tp => Seq(tp.s, tp.p, tp.o)).flatMap(termVarsOf)
+    case Bgp(ps) => ps.flatMap(tp => Seq(tp.s, tp.p, tp.o)).flatMap(RuleBody.termVars)
     case UnionBlock(branches) => branches.flatMap(blockVars)
     case OptionalBlock(inner) => blockVars(inner)
     case MinusBlock(inner) => blockVars(inner)
     case SubSelect(sub) => blockVars(sub.where)
     case BindElem(_, v) => Seq(v)
     case ValuesElem(vars, _) => vars
-    case PathPattern(ps, _, po) => termVarsOf(ps) ++ termVarsOf(po)
+    case PathPattern(ps, _, po) => RuleBody.termVars(ps) ++ RuleBody.termVars(po)
     case _ => Nil
   }
 
@@ -201,65 +202,25 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     exploded.join(fired, Seq("close"), "left_semi")
   }
 
-  /** One pattern scan over `(close, s, p, o)` content: constants filter,
-    * variables project; `close` always rides along as a join key (plus
-    * `closeTs`, the streaming path's watermarked event-time twin of
-    * close, when present — keeping it in every join key set is what
-    * bounds stream-stream join state). */
-  private def scan(content: DataFrame, tp: TriplePattern): DataFrame = {
-    var filters = List.empty[Column]
-    var binds = List.empty[(String, Column)]
-    def walk(c: Column, t: Term): Unit = t match {
-      case Var(n) => binds ::= (n -> c)
-      case other => filters ::= (c === lit(TermLex.lexical(other)))
-    }
-    walk(col("s"), tp.s); walk(col("p"), tp.p); walk(col("o"), tp.o)
-    val grouped = binds.reverse.groupBy(_._1)
-    val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
-    val filtered = (filters ++ eqs).foldLeft(content)((d, f) => d.filter(f))
-    val keys = Seq(col("close")) ++
-      (if (content.columns.contains("closeTs")) Seq(col("closeTs")) else Nil)
-    filtered.select(grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq ++
-      keys: _*)
-  }
-
-  /** One rule application over close-keyed content `(close[, closeTs],
-    * s, p, o)`: premise scans joined on shared vars + close, close-scoped
-    * NAF anti-joins, filters, head instantiation with the close keys
-    * preserved. */
-  private def applyRuleOnce(facts: DataFrame, rule: Rule): DataFrame = {
-    val keys = Seq("close") ++
-      (if (facts.columns.contains("closeTs")) Seq("closeTs") else Nil)
-    var b = rule.premise.map(scan(facts, _)).reduce(joinOnShared)
-    rule.negativePremise.foreach { ntp =>
-      val neg = scan(facts, ntp)
-      val shared = b.columns.filter(neg.columns.contains(_)).toSeq
-      b = b.join(neg, shared, "left_anti")
-    }
-    rule.filters.foreach(f => b = b.filter(condCompiler.compileCond(b, f)))
-    def termCol(t: Term): Column = t match {
-      case Var(n) =>
-        if (b.columns.contains(n)) col(n)
-        else lit(null).cast(org.apache.spark.sql.types.StringType)
-      case other => lit(TermLex.lexical(other))
-    }
-    rule.conclusion.map { tp =>
-      b.select(keys.map(col) ++ Seq(termCol(tp.s).as("s"),
-        termCol(tp.p).as("p"), termCol(tp.o).as("o")): _*)
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull)
-    }.reduce(_ unionByName _)
+  /** One rule pass over close-keyed facts `(close[, closeTs], s, p, o)`:
+    * every rule through [[RuleBody]] with the close keys carried on every
+    * scan, so premises join and NAF anti-joins scope per close, and the
+    * heads keep them. */
+  private def rulePass(facts: DataFrame): DataFrame = {
+    val keys = closeKeys(facts)
+    rules.map(r => RuleBody.head(r,
+      RuleBody.body(r, facts, None, condCompiler.compileCond, keys), keys.map(col)))
+      .reduce(_ unionByName _)
   }
 
   /** Batch R2R enrichment: naive fixpoint, each round one distributed
     * rule pass across ALL closes at once. */
   private def enrichFixpoint(content: DataFrame): DataFrame = {
-    val keys = Seq("close") ++
-      (if (content.columns.contains("closeTs")) Seq("closeTs") else Nil)
-    var facts = content.select((keys ++ Seq("s", "p", "o")).map(col): _*)
+    var facts = content.select((closeKeys(content) ++ Seq("s", "p", "o")).map(col): _*)
       .distinct().localCheckpointSevered()
     var round = 0
     while (round < 32) {
-      val derived = rules.map(applyRuleOnce(facts, _)).reduce(_ unionByName _)
+      val derived = rulePass(facts)
       // r12: checkpoint + emptiness probe fused into one action
       val (delta, deltaN) = derived.join(facts, facts.columns.toSeq, "left_anti")
         .distinct().localCheckpointSeveredCounted()
@@ -283,6 +244,9 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     * [[graft.sparql.Compiler.Bindings]], close-keyed). */
   private case class BlockRel(df: DataFrame, maybeNull: Set[String])
 
+  /** The plane's join keys: `close`, plus `closeTs` — the streaming
+    * path's watermarked event-time twin of close — when present; keeping
+    * it in every join key set is what bounds stream-stream join state. */
   private def closeKeys(df: DataFrame): Seq[String] =
     Seq("close") ++ (if (df.columns.contains("closeTs")) Seq("closeTs") else Nil)
 
@@ -577,7 +541,8 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
         s"$kind must follow a pattern element in its WINDOW block"))
     others.foreach {
       case Bgp(ps) =>
-        inner(BlockRel(ps.map(scan(content, _)).reduce(joinOnShared), Set.empty))
+        inner(BlockRel(ps.map(RuleBody.scan(content, _, closeKeys(content).map(col)))
+          .reduce(joinOnShared), Set.empty))
       case UnionBlock(branches) =>
         // SPARQL multiset union: branches may bind DIFFERENT variable
         // sets — each branch null-pads the vars it does not bind, and
@@ -1182,7 +1147,7 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
       else (0 until rounds).foldLeft(
           gated.select(col("close"), col("closeTs"), col("s"), col("p"), col("o"))) {
         (facts, _) =>
-          facts.unionByName(rules.map(applyRuleOnce(facts, _)).reduce(_ unionByName _))
+          facts.unionByName(rulePass(facts))
       }
     compileBlock(enriched, windowBlocks(w.iri))
   }
@@ -1348,12 +1313,6 @@ object DistributedRsp {
   private[streaming] val watermarkBarrier =
     udf((_: Long) => true).asNondeterministic()
 
-  private[streaming] def termVarsOf(t: Term): Seq[String] = t match {
-    case Var(n) => Seq(n)
-    case Quoted(s, p, o) => termVarsOf(s) ++ termVarsOf(p) ++ termVarsOf(o)
-    case _ => Nil
-  }
-
   /** Exact unroll requirement of a rule set on the streaming plane: the
     * longest chain of rule applications (rule A feeds rule B when one of
     * A's conclusion predicates appears among B's premise predicates).
@@ -1362,12 +1321,9 @@ object DistributedRsp {
     * variable (dependencies unknowable, treated as recursive). A
     * dependency-free set needs exactly 1 round; a 2-chain needs 2. */
   private[graft] def ruleChainDepth(rules: Seq[Rule]): Option[Int] = {
-    def constPred(t: Term): Option[String] = t match {
-      case Iri(x) => Some(x); case Lit(x) => Some(x); case _ => None
-    }
-    val headPreds = rules.map(_.conclusion.map(tp => constPred(tp.p)))
+    val headPreds = rules.map(_.conclusion.map(tp => RuleBody.constPred(tp.p)))
     val premPreds = rules.map(r =>
-      (r.premise ++ r.negativePremise).map(tp => constPred(tp.p)))
+      (r.premise ++ r.negativePremise).map(tp => RuleBody.constPred(tp.p)))
     if ((headPreds ++ premPreds).exists(_.exists(_.isEmpty))) return None
     val h = headPreds.map(_.flatten.toSet)
     val p = premPreds.map(_.flatten.toSet)
@@ -1415,11 +1371,6 @@ object DistributedRsp {
     e.withColumn("close",
         explode(when(cLo <= cHi, sequence(cLo, cHi, lit(step)))
           .otherwise(array().cast("array<bigint>"))))
-  }
-
-  private[streaming] def joinOnShared(l: DataFrame, r: DataFrame): DataFrame = {
-    val shared = l.columns.filter(r.columns.contains).toSeq // always has close
-    l.join(r, shared, "inner")
   }
 
   private[streaming] def toR2SRows(rel: DataFrame, vars: Seq[String]): Dataset[R2SRow] = {

@@ -20,7 +20,8 @@ import graft.sparql.SparqlParser
   *    (default 1000; 10K linear rounds is exactly the scheduling death
   *    the strategy choice avoids).
   *
-  * Run with GRAFT_REASONER_DEBUG=1 for per-round logs. Results recorded
+  * Prints, per depth, each strategy's wall time and round count and the
+  * typed-fact count. Results recorded
   * in SURVEY §6 / the Reasoner scaladoc. Not part of the driver
   * contract — `datalog_deep_taxonomy` is the oracle-checked entry.
   */

@@ -46,10 +46,13 @@ import org.apache.spark.sql.execution.LogicalRDD
   * attribute ids as the plain checkpoint — only the second (curried)
   * constructor argument list changes, no data moves. */
 object CheckpointBridge {
-  /** A/B escape hatch for the measured-stats leaf (−Dgraft.checkpoint
-    * .measuredStats=false reverts to the statless r7 severing). */
-  private def measuredStatsEnabled: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.checkpoint.measuredStats", "true"))
+  /** The checkpoint's materialized byte size (memory + disk) as leaf
+    * stats; None while the block manager reports no blocks for it. */
+  private def measuredStats(cs: ClassicSession, rddId: Int): Option[Statistics] =
+    cs.sparkContext.getRDDStorageInfo(_.id == rddId).headOption
+      .map(i => i.memSize + i.diskSize)
+      .filter(_ > 0L)
+      .map(b => Statistics(sizeInBytes = BigInt(b)))
 
   /** The checkpointed data's REAL partitioning/ordering, recovered from
     * the executed plan (r12). Under AQE, `Dataset.localCheckpoint` reads
@@ -66,12 +69,6 @@ object CheckpointBridge {
     * partition count matches the materialized RDD — anything else falls
     * back to the wrapper's report (never a wrong claim, at worst the old
     * missing one). */
-  /** A/B escape hatch for the executed-partitioning stamp
-    * (−Dgraft.checkpoint.executedPartitioning=false reverts to the
-    * wrapper's — i.e. Unknown — report). */
-  private def executedPartitioningEnabled: Boolean =
-    !"false".equalsIgnoreCase(
-      System.getProperty("graft.checkpoint.executedPartitioning", "true"))
 
   private def executedLayout(plan: org.apache.spark.sql.execution.SparkPlan,
       output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
@@ -82,7 +79,6 @@ object CheckpointBridge {
          Seq[org.apache.spark.sql.catalyst.expressions.SortOrder]) = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Expression}
     import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
-    if (!executedPartitioningEnabled) return (fallback, fallbackOrdering)
     val p = plan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         a.executedPlan
@@ -114,12 +110,7 @@ object CheckpointBridge {
     ck.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         val cs = ck.sparkSession.asInstanceOf[ClassicSession]
-        val measured = if (!measuredStatsEnabled) None else
-          cs.sparkContext.getRDDStorageInfo(_.id == lr.rdd.id)
-          .headOption
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
-          .map(b => Statistics(sizeInBytes = BigInt(b)))
+        val measured = measuredStats(cs, lr.rdd.id)
         val (part, ord) = executedLayout(df.queryExecution.executedPlan,
           lr.output, lr.rdd.getNumPartitions,
           lr.outputPartitioning, lr.outputOrdering)
@@ -222,12 +213,7 @@ object CheckpointBridge {
     // rebuild it severed (measured stats, no origin stats/constraints),
     // exactly like localCheckpointSevered
     val lr0 = LogicalRDD.fromDataset(rdd, ds, ds.isStreaming)
-    val measured = if (!measuredStatsEnabled) None else
-      cs.sparkContext.getRDDStorageInfo(_.id == rdd.id)
-        .headOption
-        .map(i => i.memSize + i.diskSize)
-        .filter(_ > 0L)
-        .map(b => Statistics(sizeInBytes = BigInt(b)))
+    val measured = measuredStats(cs, rdd.id)
     val (part, ord) = executedLayout(qe.executedPlan, lr0.output,
       rdd.getNumPartitions, lr0.outputPartitioning, lr0.outputOrdering)
     val leaf = new LogicalRDD(lr0.output, lr0.rdd, part,

@@ -74,4 +74,16 @@ class ExtensionsSpec extends SparkSpec {
       .head().getDouble(0)
     assert(viaSql == viaApi)
   }
+
+  test("qt_* functions register once per session: compilers leave the builder in place") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val store = graft.model.QuadStore.empty(spark)
+    val registry = spark.sessionState.functionRegistry
+    new graft.sparql.Compiler(store)
+    val first = registry.lookupFunctionBuilder(FunctionIdentifier("qt_subject"))
+    new graft.sparql.Compiler(store)
+    val second = registry.lookupFunctionBuilder(FunctionIdentifier("qt_subject"))
+    assert(first.isDefined && second.isDefined)
+    assert(first.get eq second.get, "a second Compiler replaced the qt_subject builder")
+  }
 }

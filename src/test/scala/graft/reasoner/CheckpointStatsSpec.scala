@@ -53,4 +53,22 @@ class CheckpointStatsSpec extends SparkSpec {
     assert(ck.as("a").join(ck.as("b"), col("a.o") === col("b.s")).count() == 9)
     Reasoner.unpersistCheckpoint(ck) // must find the LogicalRDD leaf; no throw
   }
+
+  test("inParallel: when one side fails, the other side's checkpoint blocks are dropped") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import Reasoner.RoundCheckpointOps
+    val base = spark.range(0, 10).select(col("id").as("s"), (col("id") + 1).as("o"))
+    @volatile var other: DataFrame = null
+    val e = intercept[IllegalStateException] {
+      Reasoner.inParallel(
+        throw new IllegalStateException("fa failed"),
+        { val r = base.localCheckpointSeveredCounted(); other = r._1; r })
+    }
+    assert(e.getMessage == "fa failed")
+    assert(other != null, "the surviving side was not awaited")
+    val rddId = other.queryExecution.analyzed.collectLeaves()
+      .collectFirst { case lr: LogicalRDD => lr.rdd.id }.get
+    assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == rddId),
+      s"checkpoint rdd $rddId of the surviving side is still cached")
+  }
 }

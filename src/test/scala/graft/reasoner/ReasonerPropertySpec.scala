@@ -1,8 +1,10 @@
 package graft.reasoner
 
 import graft.SparkSpec
-import graft.model.QuadStore
+import graft.model.{QuadStore, TermLex}
 import graft.sparql.Ast._
+import graft.sparql.SparqlParser
+import org.apache.spark.sql.functions.lit
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -10,8 +12,10 @@ import org.scalacheck.rng.Seed
   * Datalog programs over a small vocabulary, naive and semi-naive
   * materialization produce identical fact sets — mirroring the
   * reference's own naive-vs-semi-naive equivalence tests
-  * (`datalog/tests/reasoning_tests.rs`). Uses ScalaCheck generators with
-  * fixed seeds (deterministic; each sample costs several Spark jobs).
+  * (`datalog/tests/reasoning_tests.rs`) — and the semiring reasoner's
+  * facts, tags dropped, equal the plain reasoner's. Uses ScalaCheck
+  * generators with fixed seeds (deterministic; each sample costs several
+  * Spark jobs).
   */
 class ReasonerPropertySpec extends SparkSpec {
 
@@ -57,6 +61,42 @@ class ReasonerPropertySpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
       assert(naive == semi,
         s"divergence on seed $i: facts=$facts rules=${rules.map(_.name)}")
+    }
+  }
+
+  test("semiring closure projected to (s,p,o) ≡ plain closure, incl. FILTER / NOT / quoted premises") {
+    def parse(r: String) = SparqlParser().parseRule(r)
+    // FILTER, NAF and a quoted-variable premise, one input each, with the
+    // derivations each must produce: the body features every plane
+    // compiles through the same RuleBody
+    val featureFacts = List(("a", "v", "5"), ("b", "v", "50"), ("c", "v", "12"),
+      ("c", "blocked", "1"), (TermLex.encodeQuoted("a", "knows", "b"), "src", "w1"),
+      ("a", "knows", "c"))
+    val features = Seq(
+      """RULE <r/f> :- CONSTRUCT { ?s <big> ?x } WHERE { ?s <v> ?x . FILTER(?x > 10) }""" ->
+        Set(Seq("b", "big", "50"), Seq("c", "big", "12")),
+      """RULE <r/n> :- CONSTRUCT { ?s <ok> "y" } WHERE { ?s <v> ?x . NOT { ?s <blocked> ?b } }""" ->
+        Set(Seq("a", "ok", "y"), Seq("b", "ok", "y")),
+      """RULE <r/q> :- CONSTRUCT { ?a <claimed> ?b } WHERE { << ?a <knows> ?b >> <src> ?w }""" ->
+        Set(Seq("a", "claimed", "b")))
+    val inputs = features.map { case (rule, derived) =>
+        (featureFacts, List(SparqlParser().parseRule(rule)), Some(derived)) } ++
+      (1 to 3).map { i =>
+        val (facts, rules) = programGen.pureApply(Gen.Parameters.default, Seed(i.toLong))
+        (facts, rules, None)
+      }
+    inputs.zipWithIndex.foreach { case ((facts, rules, derived), i) =>
+      val df = QuadStore.fromTriples(spark, facts.distinct).quads.select("s", "p", "o")
+      val plain = new Reasoner(spark).materializeSemiNaive(df, rules, maxRounds = 20)
+        .collect().map(_.toSeq).toSet
+      derived.foreach(d => assert(plain -- facts.map(f => Seq(f._1, f._2, f._3)) == d,
+        s"plain derivations on input $i: $plain"))
+      val semiring = new AnnotatedReasoner(spark, Semiring.minMaxProbability)
+        .materialize(df.withColumn("tag", lit(0.9)), rules, maxRounds = 20)
+        .select("s", "p", "o").collect().map(_.toSeq).toSet
+      assert(semiring == plain,
+        s"divergence on input $i: facts=$facts rules=${rules.map(_.name)}; " +
+          s"semiring-only=${semiring -- plain}, plain-only=${plain -- semiring}")
     }
   }
 }
