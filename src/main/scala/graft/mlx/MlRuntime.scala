@@ -292,9 +292,9 @@ class MlRuntime(spark: SparkSession) {
       col(spec.anchorVar).as("s"),
       lit(predicate).as("p"),
       col("__label").as("o"))
-    // checkpoint once: insert() unions the LAZY plan into the store, so
-    // without this the whole select+broadcast+inference pipeline re-runs
-    // for the count below AND on every later query against the store
+    // checkpoint once: insert() reads the facts (a bounded collect, or a
+    // compaction over the bound) and the count below reads them again, so
+    // without this the whole select+broadcast+inference pipeline runs twice
     val materialized = facts.localCheckpoint()
     store.insert(materialized)
     materialized.count()

@@ -342,16 +342,18 @@ object Dedup {
       // collapsed the vocabulary (deliberately-degenerate spec corpora
       // and sf0.1-class runs stay untouched)
       if (estCand > math.max(maxCandidateBlowup * shingleMass, 5e7)) {
-        // r12 (VERDICT r11 item 8): a PROVABLE health bound lets a
+        // r12 (VERDICT r11 item 8): a high-probability health bound lets a
         // clean-but-flagged corpus skip the vocabulary-sized exact-df
         // shuffle below. Every repeated shingle contributes ≥ 2 of the
         // M = Σdf total occurrences, so with V = |vocabulary|:
         // repeated ≤ M − V, hence repeatedFrac ≤ M/V − 1. V is estimated
         // with approx_count_distinct (one narrow scan, constant-size HLL
-        // sketch — no shuffle of the vocabulary) and lower-bounded by a
-        // 3σ margin (rsd 2% → 6%), so the bound only ever OVERSTATES the
-        // repeated fraction: when even the overstated bound clears the
-        // 0.5 exhaustion line, the exact aggregation would have decided
+        // sketch — no shuffle of the vocabulary) and lowered by a 3σ
+        // margin (rsd 2% → 6%). HLL++ error is statistical, not bounded:
+        // the margin makes the bound overstate the repeated fraction with
+        // high probability (a 3σ underestimate of V is rare), not always.
+        // When the bound clears the 0.5 exhaustion line, the exact
+        // aggregation would, with that probability, have decided
         // "healthy, proceed" too, and is skipped. A corpus the bound
         // cannot clear still reaches the exact check unchanged — the
         // refusal fixture fires exactly as before (spec-pinned).

@@ -138,8 +138,19 @@ object GraphOps {
     // propagation join reuses the partitioning instead of re-shuffling
     // |E| rows per round (the pageRank prePartition result applied here;
     // the distinct() alone would leave it partitioned by (v, u))
-    val und = fwd.unionByName(fwd.select(col("u").as("v"), col("v").as("u")))
-      .distinct().repartition(col("u")).localCheckpointSevered()
+    val (und, undRows) = fwd.unionByName(fwd.select(col("u").as("v"), col("v").as("u")))
+      .distinct().repartition(col("u")).localCheckpointSeveredCounted()
+    // no edge left (empty, or self-loops only): no node has a component.
+    // Answered here, because the loop below would read und in jobs that
+    // outlive its unpersisting: AQE ends a join with an empty side
+    // early and leaves the other side's stage running, and that stage
+    // then finds und's checkpoint blocks gone and aborts its job.
+    if (undRows == 0) {
+      graft.reasoner.Reasoner.unpersistCheckpoint(und)
+      return und.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        und.select(col("v").as("node"), col("u").as("component")).schema)
+    }
     // convergence check: labels are node ids that only ever DECREASE, so
     // for integral ids Σ lbl strictly decreases whenever any vertex
     // changed and the fixpoint is "sum unchanged"; the exact sum rides

@@ -177,6 +177,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
   def port: Int = server.getAddress.getPort
 
   def start(requestedPort: Int = 0): this.type = {
+    GraftHttpServer.enableNoDelay()
     server = HttpServer.create(new InetSocketAddress(requestedPort), 0)
     server.createContext("/", rootHandler)
     server.createContext("/query", queryHandler)
@@ -294,7 +295,12 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
   /** Standard-protocol update against the standing store: deletes before
     * inserts inside [[graft.sparql.Compiler.executeUpdate]]; serialized so
     * two concurrent protocol updates never interleave read-modify-write on
-    * the store's quads reference. */
+    * the store's version. A DATA form only edits the version's driver-side
+    * delta sets (no Spark job); a `DELETE/INSERT WHERE` collects its
+    * instantiated templates first, and an update over
+    * `LocalJoinFold.MaxRows` quads compacts the store into a new base.
+    * Readers take a [[graft.model.QuadStore.snapshot]] and keep reading
+    * the version they took. */
   private def runUpdate(update: String): Unit =
     serverStore.synchronized {
       new Compiler(serverStore).executeUpdate(SparqlParser().parseUpdate(update))
@@ -330,7 +336,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
     val cols = df.columns
     val rows = df.collect()
     val root = mapper.createObjectNode()
-    val stripped = query.replaceAll("(?is)(PREFIX\\s+\\S+\\s+<[^>]*>|BASE\\s+<[^>]*>)", "").trim
+    val stripped = GraftHttpServer.PrologueDecl.matcher(query).replaceAll("").trim
     if (stripped.toLowerCase(java.util.Locale.ROOT).startsWith("ask") &&
         cols.sameElements(Array("ask"))) {
       root.putObject("head")
@@ -744,4 +750,17 @@ object GraftHttpServer {
 
   /** A results cell that reads as an absolute IRI (`scheme:rest`). */
   private val IriLike = java.util.regex.Pattern.compile("[A-Za-z][A-Za-z0-9+.\\-]*:\\S*")
+
+  /** A PREFIX or BASE declaration, stripped before the ASK-form check. */
+  private val PrologueDecl = java.util.regex.Pattern.compile(
+    "(?is)(PREFIX\\s+\\S+\\s+<[^>]*>|BASE\\s+<[^>]*>)")
+
+  /** Small responses (an SSE marker, a short update reply) must not wait
+    * on Nagle's algorithm plus the client's delayed ACK, up to 40 ms
+    * each. The JDK server reads this property once per JVM, when its
+    * first `HttpServer` is created, so it is set before that unless the
+    * user chose a value. */
+  private def enableNoDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
 }

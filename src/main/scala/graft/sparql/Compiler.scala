@@ -1083,22 +1083,24 @@ class Compiler(store: QuadStore,
   // ---- updates (`execute_query.rs:523-884`) ------------------------------
 
   def executeUpdate(u: Update): Unit = u match {
-    case InsertData(qs) => store.insert(constQuads(qs))
-    case DeleteData(qs) => store.delete(constQuads(qs))
+    // DATA forms hand their quads to the store as driver rows: no Spark job
+    case InsertData(qs) => store.updateQuads(Nil, constQuads(qs))
+    case DeleteData(qs) => store.updateQuads(constQuads(qs), Nil)
     case Modify(del, ins, where) =>
       val view = buildView(Nil, Nil)
       // templates instantiate from LEXICAL bindings
       val b = decodeAll(
         compileGroup(where, DefaultGraph, view, None).getOrElse(unitBindings))
-      // WHERE evaluated once pre-mutation: both templates share one binding
-      // snapshot — guaranteed here by lineage (templates reference the
-      // pre-mutation quads DataFrame) (`execute_query.rs:578-592`)
+      // WHERE evaluated against the pre-mutation store: both templates
+      // share one binding snapshot — guaranteed here by lineage (templates
+      // reference the pre-mutation store version, which is immutable)
+      // (`execute_query.rs:578-592`)
       val delDf = if (del.isEmpty) null else instantiate(b.df, del, forInsert = false)
       val insDf = if (ins.isEmpty) null else instantiate(b.df, ins, forInsert = true)
       store.applyUpdate(delDf, insDf)
   }
 
-  private def constQuads(qs: Seq[(TriplePattern, GraphSpec)]): DataFrame = {
+  private def constQuads(qs: Seq[(TriplePattern, GraphSpec)]): Seq[QuadStore.Quad] = {
     // INSERT DATA: one fresh blank-node allocation per update execution —
     // the same label in one update shares a node; re-running the update
     // allocates new ones (`execute_query.rs:598-600` empty-binding path)
@@ -1108,11 +1110,9 @@ class Compiler(store: QuadStore,
       case Quoted(s, p, o) => TermLex.encodeQuoted(lex(s), lex(p), lex(o))
       case other => TermLex.lexical(other)
     }
-    val rows = qs.map { case (tp, g) =>
-      Row(g match { case GraphIri(i) => i; case _ => null },
-        lex(tp.s), lex(tp.p), lex(tp.o))
+    qs.map { case (tp, g) =>
+      (g match { case GraphIri(i) => i; case _ => null }, lex(tp.s), lex(tp.p), lex(tp.o))
     }
-    spark.createDataFrame(rows.asJava, QuadStore.schema)
   }
 
   /** Instantiate template quads from a binding snapshot; solutions leaving

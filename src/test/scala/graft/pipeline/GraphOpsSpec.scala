@@ -94,11 +94,61 @@ class GraphOpsSpec extends SparkSpec {
 
   test("connected components: empty and all-self-loop edge sets converge empty") {
     // the checksum convergence test must treat the null sum of an empty
-    // label table as 0 (regression: NPE in compareTo), not crash
-    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(GraphOps.connectedComponents(empty).count() == 0)
-    val loops = Seq((7L, 7L), (9L, 9L)).toDF("src", "dst")
-    assert(GraphOps.connectedComponents(loops).count() == 0)
+    // label table as 0 (regression: NPE in compareTo), not crash; and no
+    // job may fail on the way (regression: a read of an unpersisted local
+    // checkpoint aborted a job whose failure was then swallowed)
+    val failed = failedJobs {
+      val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+      assert(GraphOps.connectedComponents(empty).count() == 0)
+      val loops = Seq((7L, 7L), (9L, 9L)).toDF("src", "dst")
+      assert(GraphOps.connectedComponents(loops).count() == 0)
+      val strLoops = Seq(("x", "x")).toDF("src", "dst")
+      assert(GraphOps.connectedComponents(strLoops).count() == 0)
+    }
+    assert(failed == 0, s"$failed Spark jobs failed")
+  }
+
+  /** Spark jobs of `body` (run on this thread, under its own job group)
+    * that ended in failure, counted once every job the body started has
+    * ended: a job the body leaves running fails after the body returns. */
+  private def failedJobs(body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = "graph-ops-spec-jobs"
+    val marker = "graph-ops-spec-marker"
+    val started, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val failed = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) {
+          if (props.exists(_.getProperty("spark.job.description") == marker)) markerSeen = true
+          else started.add(j.jobId)
+        }
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = if (started.contains(j.jobId)) {
+        if (j.jobResult.isInstanceOf[JobFailed]) failed.incrementAndGet()
+        ended.add(j.jobId)
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, null)
+    try {
+      body
+      // listener events arrive in order: once the marker job is seen,
+      // every job of the body has started
+      sc.setJobGroup(group, marker)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!(markerSeen && ended.containsAll(started)) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(markerSeen && ended.containsAll(started))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    failed.get
   }
 
   test("connected components: pointer doubling collapses a long chain") {

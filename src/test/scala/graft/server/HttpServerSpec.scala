@@ -88,6 +88,22 @@ class HttpServerSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("the server turns TCP_NODELAY on itself, unless the user chose a value") {
+    val key = "sun.net.httpserver.nodelay"
+    val saved = Option(System.getProperty(key))
+    try {
+      System.clearProperty(key)
+      val srv = new GraftHttpServer(spark).start()
+      try assert(System.getProperty(key) == "true") finally srv.stop()
+      System.setProperty(key, "false")
+      val srv2 = new GraftHttpServer(spark).start()
+      try assert(System.getProperty(key) == "false") finally srv2.stop()
+    } finally saved match {
+      case Some(v) => System.setProperty(key, v)
+      case None => System.clearProperty(key)
+    }
+  }
+
   test("GET / serves the embedded playground; unknown paths 404") {
     val srv = new GraftHttpServer(spark).start()
     try {
