@@ -39,6 +39,10 @@ import graft.sparql.{Compiler, SparqlParser}
   *    answers tab-separated text here, `sparql_database.rs:2036-2044`.)
   *  - `OPTIONS` answers CORS preflight like the reference.
   *
+  * Every `/query` read, update or envelope request, `/rsp/push` and
+  * `/rsp-query` runs its Spark jobs under its own job group,
+  * `graft-http-<read|update|envelope|push|rsp-query>-<n>`.
+  *
   * RSP persistent sessions (`main.rs:616-948`):
   *  - `POST /rsp/register` `{query, static_rdf?, static_format?,
   *    sparql_rules?}` → builds an [[graft.streaming.RspEngine]] whose
@@ -234,9 +238,9 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
             // Python client read it); a standard client that ASKS for
             // SPARQL results via Accept gets the conformant body
             case Some(q) if wantsSparqlResults(exchange) =>
-              respondSparqlResults(exchange, q)
-            case Some(q) => respond(exchange, 200,
-              runQueries(Seq(q), Nil, None, "ntriples").toString)
+              inJobGroup("read", q)(respondSparqlResults(exchange, q))
+            case Some(q) => inJobGroup("read", q)(respond(exchange, 200,
+              runQueries(Seq(q), Nil, None, "ntriples").toString))
             case None => respond(exchange, 400, error("No queries provided"))
           }
         case "POST" =>
@@ -256,13 +260,14 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
             .map(_.split(";")(0).trim.toLowerCase(java.util.Locale.ROOT))
             .getOrElse("")
           contentType match {
-            case "application/sparql-query" =>
+            case "application/sparql-query" => inJobGroup("read", body) {
               if (wantsEnvelope(exchange))
                 respond(exchange, 200,
                   runQueries(Seq(body), Nil, None, "ntriples").toString)
               else respondSparqlResults(exchange, body)
+            }
             case "application/sparql-update" =>
-              runUpdate(body)
+              inJobGroup("update", body)(runUpdate(body))
               respond(exchange, 200, updateOk)
             case "application/x-www-form-urlencoded" =>
               val params = body.split("&").filter(_.contains("=")).map { kv =>
@@ -271,18 +276,19 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
                   java.net.URLDecoder.decode(v, "UTF-8")
               }.toMap
               (params.get("query"), params.get("update")) match {
-                case (Some(q), _) =>
+                case (Some(q), _) => inJobGroup("read", q) {
                   if (wantsEnvelope(exchange))
                     respond(exchange, 200,
                       runQueries(Seq(q), Nil, None, "ntriples").toString)
                   else respondSparqlResults(exchange, q)
+                }
                 case (_, Some(u)) =>
-                  runUpdate(u)
+                  inJobGroup("update", u)(runUpdate(u))
                   respond(exchange, 200, updateOk)
                 case _ => respond(exchange, 400,
                   error("form body needs a query= or update= parameter"))
               }
-            case _ => postEnvelope(exchange, body)
+            case _ => inJobGroup("envelope", body)(postEnvelope(exchange, body))
           }
         case _ => respond(exchange, 404, error("Not Found"))
       }
@@ -291,6 +297,21 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
         respond(exchange, 413, error("Request body too large"))
       case e: Exception => fail(exchange, e)
     }
+
+  private val requestCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Runs one request's work under the Spark job group
+    * `graft-http-<route>-<n>` (n counts requests per server), described
+    * by the first 80 characters of its text: every job it starts can be
+    * attributed to it and cancelled with `cancelJobGroup`. The group is a
+    * thread-local property and the cached pool reuses threads, so it is
+    * cleared afterwards. */
+  private def inJobGroup[T](route: String, text: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(s"graft-http-$route-${requestCounter.incrementAndGet()}",
+      text.take(80), interruptOnCancel = true)
+    try body finally sc.clearJobGroup()
+  }
 
   /** Standard-protocol update against the standing store: deletes before
     * inserts inside [[graft.sparql.Compiler.executeUpdate]]; serialized so
@@ -422,7 +443,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
             case Left(msg) => respond(exchange, 400, error(msg))
             case Right(req) if req.get("query") == null || req.get("query").isNull =>
               respond(exchange, 400, error("No query provided"))
-            case Right(req) =>
+            case Right(req) => inJobGroup("rsp-query", req.get("query").asText()) {
               val t0 = System.nanoTime()
               val staticRdf = Option(req.get("static_rdf")).filter(!_.isNull)
                 .map(_.asText()).filter(_.trim.nonEmpty)
@@ -459,6 +480,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
               resp.put("total_results", rows.size)
               resp.put("execution_time_ms", (System.nanoTime() - t0) / 1e6)
               respond(exchange, 200, resp.toString)
+            }
           }
         case _ => respond(exchange, 404, error("Not Found"))
       }
@@ -575,7 +597,7 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
                     // the backend fires windows as event time advances and
                     // enqueues each emission's rows (engine: consumer;
                     // distributed: per-micro-batch forwarder)
-                    session.backend.push(stream, ts, RdfIO.parseNtDoc(nt))
+                    inJobGroup("push", nt)(session.backend.push(stream, ts, RdfIO.parseNtDoc(nt)))
                   }
                   session.queue.offer("__FIRING_END__")
                 }

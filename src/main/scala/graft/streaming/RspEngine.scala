@@ -1,8 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan, Range}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.immutable.ArraySeq
 import graft.model.{LocalJoinFold, QuadStore}
 import graft.sparql.Ast._
 import graft.sparql.{Compiler, SparqlParser}
@@ -30,6 +36,20 @@ import graft.sparql.{Compiler, SparqlParser}
   * join compares (`LocalJoinFold.MaxRows`); a larger window, a static store read from
   * files, rule enrichment or a cross-window closure still plans
   * Spark jobs, with the same results.
+  *
+  * Each window block and the emission compile once per engine. A
+  * window's first firing compiles its block over a placeholder content
+  * store (an empty `LocalRelation`) and keeps the analyzed plan; every
+  * firing then swaps its deduplicated triples into that leaf, so it runs
+  * only the optimizer and a local scan, not the SPARQL compile and the
+  * analysis. The emission keeps one plan likewise, with one placeholder
+  * per window's cached relation, and compiles again when the static
+  * store has moved to a new version. A window compiles its block per
+  * firing, over the real content store, when the engine has R2R rules
+  * or runs in cross-window mode, when the content exceeds
+  * `LocalJoinFold.MaxRows` triples, or when the prepared plan has a leaf
+  * other than the placeholder, VALUES rows or `range(1)` (a property
+  * path's closure is checkpointed while it compiles).
   *
   * Firing rule (validated against `rsp_engine_test.rs:10-193`): windows
   * close at multiples of STEP; an event at time t fires the max close c
@@ -88,6 +108,14 @@ object RspEngine {
   final case class CrossWindow(rulesN3: String, incremental: Boolean = true)
 
   final case class Emission(windowClose: Long, rows: Seq[Map[String, String]])
+
+  /** An empty `LocalRelation` of `schema` whose `data` is its own
+    * instance: every empty `Seq` equals every other, so a placeholder is
+    * found by reference (`eq`), never by `==` (which would also match
+    * VALUES or empty relations). */
+  private def placeholder(schema: StructType): LocalRelation =
+    LocalRelation(schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()),
+      ArraySeq.unsafeWrapArray(new Array[InternalRow](0)))
 }
 
 class RspEngine(
@@ -127,7 +155,7 @@ class RspEngine(
         scala.collection.mutable.ArrayBuffer.empty,
       var firstEventTs: Option[Long] = None,
       var lastFiredClose: Option[Long] = None,
-      var latest: Option[Seq[Row]] = None,
+      var latest: Option[Seq[InternalRow]] = None,
       var latestCols: Seq[String] = Nil,
       /** Cross-window mode: the latest firing's raw `(ts, s, p, o)`
         * content (replace semantics, `rsp_engine.rs:655-658`). */
@@ -141,7 +169,11 @@ class RspEngine(
         * inside each CSPARQLWindow). */
       reportStrats: Seq[RspEngine.ReportStrategy] = Seq(RspEngine.OnWindowClose),
       var fireCount: Int = 0,
-      var lastContentHash: Option[Int] = None)
+      var lastContentHash: Option[Int] = None) {
+    /** The block compiled once over a placeholder content store; None
+      * when its plan reads other data ([[prepareBlock]]). */
+    lazy val prepared: Option[Prepared] = prepareBlock(blockElems)
+  }
 
   private val windowBlocks: Map[String, Seq[Element]] =
     query.select.where.collect { case WindowBlockElem(w, elems) => w -> elems }.toMap
@@ -344,14 +376,15 @@ class RspEngine(
     // the firing counter and last-content hash are per-window so
     // interleaved firings of different windows never cross-talk
     w.fireCount += 1
-    val contentHash = content.toSet.hashCode()
+    val contentHash =
+      if (w.reportStrats.contains(OnContentChange)) Some(content.toSet.hashCode()) else None
     val passes = w.reportStrats.forall {
       case OnWindowClose => true
       case NonEmptyContent => content.nonEmpty
-      case OnContentChange => !w.lastContentHash.contains(contentHash)
+      case OnContentChange => w.lastContentHash != contentHash
       case Periodic(n) => w.fireCount % math.max(n, 1) == 0
     }
-    w.lastContentHash = Some(contentHash)
+    w.lastContentHash = contentHash
     if (!passes) return
     val wasCycleOpen = windows.exists(_.fresh)
     if (crossWindow.isDefined) {
@@ -360,15 +393,28 @@ class RspEngine(
       // the SDS+-materialized live facts, not here
       w.latestRaw = Some(contentTs)
     } else {
-      // R2R: run this window's compiled block over the content store,
-      // enriched by the registered rules' forward chaining
-      val store = QuadStore.fromTriples(spark, content)
-      if (rules.nonEmpty)
-        new graft.reasoner.Reasoner(spark).materialize(store, rules)
-      val b = new Compiler(store).compileElements(w.blockElems)
-      val asStrings = b.df.select(b.df.columns.map(c => col(c).cast("string").as(c)).toSeq: _*)
-      w.latest = Some(asStrings.collect().toSeq)
-      w.latestCols = b.df.columns.toSeq
+      // R2R: run this window's block over the content (set semantics,
+      // as the content store holds it): the prepared plan with the
+      // triples swapped in, or a compile over the content store, enriched
+      // by the registered rules' forward chaining
+      val unique = content.distinct
+      val prepared =
+        if (rules.isEmpty && unique.size <= LocalJoinFold.MaxRows) w.prepared else None
+      val (rows, cols) = prepared match {
+        case Some(plan) => (plan.run(Seq(unique.map { case (s, p, o) =>
+            InternalRow(null, UTF8String.fromString(s), UTF8String.fromString(p),
+              UTF8String.fromString(o))
+          })), plan.columns)
+        case None =>
+          val store = QuadStore.fromTriples(spark, unique)
+          if (rules.nonEmpty)
+            new graft.reasoner.Reasoner(spark).materialize(store, rules)
+          val df = compileBlock(w.blockElems, store)
+          (df.collect(), df.columns.toSeq)
+      }
+      w.latest = Some(rows.map(r => InternalRow.fromSeq(
+        r.toSeq.map(v => UTF8String.fromString(v.asInstanceOf[String])))).toSeq)
+      w.latestCols = cols
     }
     w.fresh = true
     if (!wasCycleOpen) cycleStartVt = Some(triggerTs)
@@ -394,6 +440,92 @@ class RspEngine(
     emitJoined(close)
   }
 
+  /** The compile both firing paths share: this block over `store`, every
+    * column cast to string. */
+  private def compileBlock(blockElems: Seq[Element], store: QuadStore): DataFrame = {
+    blockCompiles += 1
+    val b = new Compiler(store).compileElements(blockElems)
+    b.df.select(b.df.columns.map(c => col(c).cast("string").as(c)).toSeq: _*)
+  }
+
+  /** Window-block compiles (over all windows) and emission compiles so far. */
+  private[streaming] var blockCompiles = 0
+  private[streaming] var emissionCompiles = 0
+
+  /** The block compiled over a placeholder content store, kept when every
+    * leaf of its plan is the placeholder, VALUES rows or `range(1)` —
+    * anything else (a property path's checkpointed closure) was read at
+    * compile time and would go stale. */
+  private def prepareBlock(blockElems: Seq[Element]): Option[Prepared] = {
+    val p = prepare(Seq(QuadStore.schema))(in =>
+      compileBlock(blockElems, QuadStore(spark, in.head)))
+    val fixed = p.plan.collectWithSubqueries { case l: LeafNode => l }.forall {
+      case _: LocalRelation => true
+      case r: Range => r.start == 0 && r.end == 1
+      case _ => false
+    }
+    if (fixed) Some(p) else None
+  }
+
+  /** A store for emissions without a static store. */
+  private lazy val emptyStore = QuadStore.empty(spark)
+  private def resolvedStatic: QuadStore = staticStore.getOrElse(emptyStore)
+
+  /** The emission compiled over one placeholder per window, with the
+    * static quads frame and window columns it was compiled for: a new
+    * static store version or new columns compile it again. */
+  private var emission: Option[(DataFrame, Seq[Seq[String]], Prepared)] = None
+
+  private def preparedEmission(): Prepared = {
+    val static = resolvedStatic
+    val cols = windows.map(_.latestCols)
+    emission match {
+      case Some((q, c, p)) if (q eq static.quads) && c == cols => p
+      case _ =>
+        val quads = static.quads
+        emissionCompiles += 1
+        val p = prepare(cols.map(cs => StructType(cs.map(StructField(_, StringType)))))(ins =>
+          emissionFrame(ins.map(Compiler.Bindings(_, Set.empty)), static))
+        emission = Some((quads, cols, p))
+        p
+    }
+  }
+
+  /** The emission's frame: the window relations compat-joined, then the
+    * static patterns, then the solution modifiers. */
+  private def emissionFrame(windowBindings: Seq[Compiler.Bindings], static: QuadStore): DataFrame = {
+    val c = new Compiler(static)
+    var joined = windowBindings.reduce(c.compatJoin)
+    if (staticElems.nonEmpty) joined = c.compatJoin(joined, c.compileElements(staticElems))
+    c.finalizeSelect(joined, query.select, subquery = false)
+  }
+
+  /** Builds `build`'s frame over one placeholder leaf per schema and keeps
+    * its analyzed plan. */
+  private def prepare(schemas: Seq[StructType])(build: Seq[DataFrame] => DataFrame): Prepared = {
+    val leaves = schemas.map(placeholder)
+    val df = build(leaves.map(PlanBridge.ofAnalyzed(spark, _)))
+    new Prepared(df.queryExecution.analyzed, df.columns.toSeq, leaves.map(_.data))
+  }
+
+  /** An analyzed plan kept across firings: `run` swaps each slot's rows
+    * into the placeholder leaves (found by their `data` instance, which
+    * the analyzer's relation deduplication keeps) and collects. The
+    * optimizer still runs on every call, so `LocalJoinFold` and
+    * `ConvertToLocalRelation` fold the filled plan to a local scan. */
+  private final class Prepared(val plan: LogicalPlan, val columns: Seq[String],
+      slots: Seq[Seq[InternalRow]]) {
+    def run(fills: Seq[Seq[InternalRow]]): Array[Row] = {
+      val filled = plan.transformUpWithSubqueries {
+        case l: LocalRelation => slots.indexWhere(_ eq l.data) match {
+          case -1 => l
+          case i => l.copy(data = fills(i))
+        }
+      }
+      PlanBridge.ofAnalyzed(spark, filled).collect()
+    }
+  }
+
   /** Cross-window emission inputs (`rsp_engine.rs:1213-1268`
     * emit_cross_window_results): union every window's latest raw content
     * tagged with ITS width as α, materialize the live SDS+ closure as of
@@ -415,23 +547,16 @@ class RspEngine(
   /** Data plane of one emission: join the latest window relations, then
     * static patterns, then solution modifiers and the R2S diff. */
   private def emitJoined(close: Long): Unit = {
-    val windowBindings =
-      if (crossWindow.isDefined) crossWindowBindings(close)
-      else windows.map { w =>
-        val schema = org.apache.spark.sql.types.StructType(w.latestCols.map(c =>
-          org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType, nullable = true)))
-        Compiler.Bindings(spark.createDataFrame(w.latest.get.asJava, schema), Set.empty)
+    val (result, cols) =
+      if (crossWindow.isDefined) {
+        val df = emissionFrame(crossWindowBindings(close), resolvedStatic)
+        (df.collect(), df.columns)
+      } else {
+        val p = preparedEmission()
+        (p.run(windows.map(_.latest.get)), p.columns.toArray)
       }
-    val anyStore = staticStore.getOrElse(QuadStore.empty(spark))
-    val c = new Compiler(anyStore)
-    var joined = windowBindings.reduce(c.compatJoin)
-    if (staticElems.nonEmpty) {
-      val sb = c.compileElements(staticElems)
-      joined = c.compatJoin(joined, sb)
-    }
-    val result = c.finalizeSelect(joined, query.select, subquery = false)
-    val rows = result.collect().map { r =>
-      result.columns.zipWithIndex.flatMap { case (col, i) =>
+    val rows = result.map { r =>
+      cols.zipWithIndex.flatMap { case (col, i) =>
         Option(r.get(i)).map(v => col -> v.toString)
       }.toMap
     }.toSeq

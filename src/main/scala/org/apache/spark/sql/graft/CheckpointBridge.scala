@@ -155,28 +155,49 @@ object CheckpointBridge {
     * their own accessor, which sign-extends: an UnsafeRow stores them
     * zero-extended in an 8-byte word, so `getLong` would read int -1 as
     * 4294967295. Any other column type is refused. The column must be
-    * non-null (`sumOrdinal` is a schema ordinal of `df`). */
+    * non-null (`sumOrdinal` is a schema ordinal of `df`).
+    *
+    * Each task counts and sums in primitive longs, so a row allocates
+    * nothing; a partition's sum moves into a BigInteger only when the
+    * long addition overflows (`Math.addExact` throws). */
   def localCheckpointSeveredCountSum(df: DataFrame,
       sumOrdinal: Int): (DataFrame, Long, BigInt) = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val read: InternalRow => Long = df.schema(sumOrdinal).dataType match {
-      case LongType => _.getLong(sumOrdinal)
-      case IntegerType => _.getInt(sumOrdinal).toLong
-      case ShortType => _.getShort(sumOrdinal).toLong
-      case ByteType => _.getByte(sumOrdinal).toLong
+    import java.math.BigInteger
+    // an accessor code, not an `InternalRow => Long` function: a generic
+    // Function1 returns its Long boxed
+    val width = df.schema(sumOrdinal).dataType match {
+      case LongType => 8
+      case IntegerType => 4
+      case ShortType => 2
+      case ByteType => 1
       case t => throw new IllegalArgumentException(
         s"localCheckpointSeveredCountSum: column $sumOrdinal is $t, not an integral type")
     }
-    val (ck, (n, s)) = localCheckpointSeveredAgg[(Long, java.math.BigInteger)](
-      df, (0L, java.math.BigInteger.ZERO),
-      { case ((n0, big0), row) =>
-          // the tuple alloc per row is the price of the shared generic
-          // interface — convergence scans are a tiny fraction of a
-          // round's join work
-          (n0 + 1L, big0.add(java.math.BigInteger.valueOf(read(row))))
-      },
-      { case ((n1, b1), (n2, b2)) => (n1 + n2, b1.add(b2)) })
-    (ck, n, BigInt(s))
+    val (ck, perPartition) = checkpointWith(df) { it =>
+      var n = 0L
+      var sum = 0L
+      var spilled = BigInteger.ZERO // the part of the sum past a long
+      while (it.hasNext) {
+        val row = it.next()
+        val v = width match {
+          case 8 => row.getLong(sumOrdinal)
+          case 4 => row.getInt(sumOrdinal).toLong
+          case 2 => row.getShort(sumOrdinal).toLong
+          case _ => row.getByte(sumOrdinal).toLong
+        }
+        n += 1L
+        try sum = Math.addExact(sum, v)
+        catch {
+          case _: ArithmeticException =>
+            spilled = spilled.add(BigInteger.valueOf(sum)).add(BigInteger.valueOf(v))
+            sum = 0L
+        }
+      }
+      (n, spilled.add(BigInteger.valueOf(sum)))
+    }
+    (ck, perPartition.map(_._1).sum,
+      BigInt(perPartition.map(_._2).foldLeft(BigInteger.ZERO)(_.add(_))))
   }
 
   /** Severed checkpoint + an arbitrary per-row driver aggregate in ONE
@@ -190,6 +211,20 @@ object CheckpointBridge {
     * and integer sums, never float accumulation). */
   def localCheckpointSeveredAgg[T: scala.reflect.ClassTag](df: DataFrame, zero: T,
       seqOp: (T, InternalRow) => T, combOp: (T, T) => T): (DataFrame, T) = {
+    val sq = seqOp; val z = zero // avoid capturing `this`/params lazily
+    val (ck, perPartition) = checkpointWith(df) { it =>
+      var acc = z
+      while (it.hasNext) acc = sq(acc, it.next())
+      acc
+    }
+    (ck, perPartition.foldLeft(zero)(combOp))
+  }
+
+  /** The severed checkpoint of `df` plus `task`'s result per partition,
+    * from the ONE job that materializes the blocks: `task` sees each
+    * materialized [[InternalRow]] of its partition exactly once. */
+  private def checkpointWith[U: scala.reflect.ClassTag](df: DataFrame)(
+      task: Iterator[InternalRow] => U): (DataFrame, Array[U]) = {
     val cs = df.sparkSession.asInstanceOf[ClassicSession]
     val ds = df.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     val qe = ds.queryExecution
@@ -200,14 +235,7 @@ object CheckpointBridge {
     // store and folds the convergence aggregate per partition
     val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val sq = seqOp; val z = zero // avoid capturing `this`/params lazily
-    val perPartition = cs.sparkContext.runJob(rdd,
-      (it: Iterator[InternalRow]) => {
-        var acc = z
-        while (it.hasNext) acc = sq(acc, it.next())
-        acc
-      })
-    val total = perPartition.foldLeft(zero)(combOp)
+    val perPartition = cs.sparkContext.runJob(rdd, task)
     // leaf construction: fromDataset performs the attribute-consistent
     // output/partitioning/ordering rewrite Dataset.checkpoint uses; then
     // rebuild it severed (measured stats, no origin stats/constraints),
@@ -218,6 +246,6 @@ object CheckpointBridge {
       rdd.getNumPartitions, lr0.outputPartitioning, lr0.outputOrdering)
     val leaf = new LogicalRDD(lr0.output, lr0.rdd, part,
       ord, lr0.isStreaming, lr0.stream)(cs, measured, None)
-    (Dataset.ofRows(cs, leaf), total)
+    (Dataset.ofRows(cs, leaf), perPartition)
   }
 }

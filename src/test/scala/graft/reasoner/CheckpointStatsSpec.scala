@@ -71,4 +71,22 @@ class CheckpointStatsSpec extends SparkSpec {
     assert(!spark.sparkContext.getRDDStorageInfo.exists(_.id == rddId),
       s"checkpoint rdd $rddId of the surviving side is still cached")
   }
+
+  test("count-sum: a Long column summing past Long.MaxValue with both signs stays exact") {
+    import org.apache.spark.sql.graft.CheckpointBridge
+    import spark.implicits._
+    val (max, min) = (Long.MaxValue, Long.MinValue)
+    // one partition per group: the first overflows downward, the second
+    // upward, the third both ways; the total lies past Long.MaxValue
+    val parts = Seq(Seq(min, min, 3L), Seq(max, max, max, -1L), Seq(max, -7L, max, min, max))
+    val df = spark.sparkContext.parallelize(parts, parts.size).flatMap(identity).toDF("c")
+    val (ck, n, sum) = CheckpointBridge.localCheckpointSeveredCountSum(df, sumOrdinal = 0)
+    val exact = BigInt(df.selectExpr("sum(cast(c as decimal(38,0)))").head()
+      .getDecimal(0).toBigIntegerExact)
+    assert(exact > BigInt(max))
+    assert(sum == exact)
+    assert(sum == parts.flatten.map(BigInt(_)).sum)
+    assert(n == parts.flatten.size)
+    assert(ck.collect().map(_.getLong(0)).sorted.sameElements(parts.flatten.sorted))
+  }
 }

@@ -493,4 +493,60 @@ class HttpServerSpec extends SparkSpec {
       assert(results.get(1).get("data").get(0).get(0).get(1).asText() == "o1")
     } finally srv.stop()
   }
+
+  test("every Spark job of a request runs under that request's own job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // a store over an RDD: its reads plan Spark jobs
+    val quads = spark.createDataFrame(spark.sparkContext.parallelize(
+      (0 until 40).map(i => org.apache.spark.sql.Row(null, s"http://ex.org/s$i",
+        "http://ex.org/p", s"http://ex.org/o${i % 7}")), 2), QuadStore.schema)
+    val srv = new GraftHttpServer(spark, Some(QuadStore(spark, quads))).start()
+    val sc = spark.sparkContext
+    val marker = "http-spec-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    @volatile var markers = 0
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        val group = p.flatMap(x => Option(x.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (group == marker) markers += 1
+        else seen.add(group -> p.flatMap(x =>
+          Option(x.getProperty("spark.job.description"))).getOrElse(""))
+      }
+    }
+    val q = "SELECT ?s ?o WHERE { ?s <http://ex.org/p> ?o . FILTER(?o != <http://ex.org/o3>) } ORDER BY ?s"
+    // the jobs one read starts, once the listener has delivered them all
+    def jobsOf(query: String): List[(String, String)] = {
+      seen.clear()
+      val resp = client.send(
+        HttpRequest.newBuilder(new URI(s"http://localhost:${srv.port}/query"))
+          .header("Content-Type", "application/sparql-query")
+          .header("Accept", "application/sparql-results+json")
+          .POST(HttpRequest.BodyPublishers.ofString(query)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(resp.statusCode() == 200, resp.body())
+      val before = markers
+      sc.setJobGroup(marker, null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (markers == before && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markers > before)
+      seen.toArray(Array.empty[(String, String)]).toList
+    }
+    sc.addSparkListener(listener)
+    try {
+      val first = jobsOf(q)
+      val second = jobsOf(q)
+      Seq(first, second).foreach { jobs =>
+        assert(jobs.nonEmpty)
+        assert(jobs.map(_._1).distinct.size == 1, s"jobs of one read in several groups: $jobs")
+        assert(jobs.head._1.matches("graft-http-read-\\d+"), jobs.head._1)
+        assert(jobs.forall(_._2 == q.take(80)), jobs)
+      }
+      assert(first.head._1 != second.head._1)
+    } finally {
+      sc.removeSparkListener(listener)
+      srv.stop()
+    }
+  }
 }
