@@ -169,26 +169,9 @@ object Bench {
     var warmSecs = 0.0
     val warmRep = scala.collection.mutable.LinkedHashMap[String, Double]()
     val timed = selected.map { name =>
-      val tw = System.nanoTime()
-      try all(name)(spark, sfDir).count()
-      catch { case _: Throwable => () } // timed reps record the failure
-      val w = (System.nanoTime() - tw) / 1e9
+      val (w, runs, failure) = runEntry(spark, name, all(name), sfDir, reps)
       warmRep(name) = w; warmSecs += w
-      System.gc()
-      // chronological rep times — kept unsorted in "rep_times" so a big
-      // max is attributable (late-rep GC drift; rep-1 JIT is now absorbed
-      // by the warm rep above)
-      val runs = (1 to reps).flatMap { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { all(name)(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            failedQ(name) = e.toString.take(300)
-            System.err.println(s"[bench] $name FAILED: $e"); false }
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.gc() // drive the weak-ref ContextCleaner between queries
-        if (ok) Some(secs) else None
-      }
+      failure.foreach(f => failedQ(name) = f)
       (name, runs)
     }.filter(_._2.nonEmpty)
     val results = ("_load_quads", loadSecs) +:
@@ -248,4 +231,33 @@ object Bench {
     System.out.flush()
     sys.exit(if (failedQ.nonEmpty) 1 else 0)
   }
+
+  /** One entry under the job group `graft-bench-<name>`: an untimed warm
+    * rep, then `reps` timed ones. Returns the warm rep's seconds, the
+    * successful reps' seconds in run order (kept unsorted in "rep_times"
+    * so a big max is attributable to late-rep GC drift; rep-1 JIT is
+    * absorbed by the warm rep) and the last failure, if any. */
+  def runEntry(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      sfDir: String, reps: Int): (Double, Seq[Double], Option[String]) =
+    SparkEntry.inEntryGroup(spark, "bench", name) {
+      val tw = System.nanoTime()
+      try fn(spark, sfDir).count()
+      catch { case _: Throwable => () } // timed reps record the failure
+      val w = (System.nanoTime() - tw) / 1e9
+      System.gc()
+      var failure = Option.empty[String]
+      val runs = (1 to reps).flatMap { _ =>
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).count(); true }
+          catch { case e: Throwable =>
+            failure = Some(e.toString.take(300))
+            System.err.println(s"[bench] $name FAILED: $e"); false }
+        val secs = (System.nanoTime() - t0) / 1e9
+        System.gc() // drive the weak-ref ContextCleaner between queries
+        if (ok) Some(secs) else None
+      }
+      (w, runs, failure)
+    }
 }

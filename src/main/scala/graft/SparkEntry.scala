@@ -35,4 +35,14 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     suites.map(_._2).reduce(_ ++ _)
+
+  /** Runs `body` under the Spark job group `graft-<surface>-<entry>`,
+    * described by the entry's name, and clears it afterwards: every job a
+    * Verify or Bench entry starts can be attributed to the entry and
+    * cancelled with `cancelJobGroup`. */
+  def inEntryGroup[T](spark: SparkSession, surface: String, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(s"graft-$surface-$name", name, interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+  }
 }

@@ -31,11 +31,9 @@ object Verify {
     // final registry-vs-dumped diff line that cannot be missed.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
-        System.err.println(s"[verify] $name FAILED: ${failed(name)}")
+      dumpEntry(spark, name, fn, sfDir, outDir).foreach { msg =>
+        failed(name) = msg
+        System.err.println(s"[verify] $name FAILED: $msg")
       }
       System.gc() // drive the weak-ref ContextCleaner between queries
     }
@@ -68,4 +66,16 @@ object Verify {
        else "; registry fully dumped"))
     spark.stop()
   }
+
+  /** Writes one entry's result to `<outDir>/<name>` as parquet, under the
+    * job group `graft-verify-<name>`; the failure message, if it threw. */
+  def dumpEntry(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      sfDir: String, outDir: String): Option[String] =
+    SparkEntry.inEntryGroup(spark, "verify", name) {
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable => Some(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+    }
 }

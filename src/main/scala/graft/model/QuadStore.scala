@@ -16,7 +16,11 @@ import scala.jdk.CollectionConverters._
   * (gspo/gpos/gosp/spog), this store holds one quads DataFrame
   * `(g, s, p, o)` — Catalyst predicate pushdown into Parquet plus
   * partition pruning replace the permutation dispatch
-  * (`dataset_index.rs:223-344`).
+  * (`dataset_index.rs:223-344`). A store that serves resident reads (the
+  * HTTP server's standing store, [[enableResidentReads]]) also keeps
+  * driver-resident default-graph predicate slices per base
+  * ([[ResidentSlices]], our analogue of the reference's gpos index), and
+  * its small BGPs join on the driver instead of scanning.
   *
   * Updates: the reference edits its hash indexes in place
   * (`dataset_index.rs:109-183`), so a read costs the same after any number
@@ -62,13 +66,23 @@ class QuadStore(val spark: SparkSession, initial: DataFrame,
   // CONSISTENT multi-field view (version + encoded snapshot + catalog)
   // readers use [[snapshot]], which takes the store's own monitor — the
   // same lock [[publish]] and serialized updaters hold.
-  @volatile private var version: Version =
-    new Version(align(spark, initial), Set.empty, Set.empty)
+  @volatile private var version: Version = Version(align(spark, initial))
   @volatile private var graphCatalog: Set[String] = Set.empty
   /** String→String UDF registry (`sparql_database.rs:2130-2135`). */
   val udfs = scala.collection.mutable.Map.empty[String, Seq[String] => String]
 
   def quads: DataFrame = version.quads
+
+  /** Set once by the HTTP server on its standing store and carried by
+    * [[snapshot]]s: the store is long-lived and read again and again, so
+    * its BGP reads may run on the driver from resident predicate slices
+    * ([[graft.sparql.Compiler]]). Loads nothing by itself. */
+  @volatile private var residentReads = false
+  private[graft] def enableResidentReads(): this.type = { residentReads = true; this }
+
+  /** The current version, when this store serves resident reads. */
+  private[graft] def residentVersion: Option[Version] =
+    if (residentReads) Some(version) else None
 
   /** Materialized (id-table, terms-table) pair replacing the lazy encoded
     * views — the on-disk layout a dictionary-encoded corpus would actually
@@ -93,6 +107,7 @@ class QuadStore(val spark: SparkSession, initial: DataFrame,
   def snapshot: QuadStore = this.synchronized {
     val s = new QuadStore(spark, version.base, dictEncoded)
     s.version = version
+    s.residentReads = residentReads
     s.graphCatalog = graphCatalog
     s.encodedSource = encodedSource
     s.derivedTerms = derivedTerms
@@ -194,7 +209,7 @@ class QuadStore(val spark: SparkSession, initial: DataFrame,
     val v = version
     val d = deletes.toSet
     val i = inserts.toSet
-    val next = new Version(v.base, (v.inserted -- d) ++ i, (v.deleted ++ d) -- i)
+    val next = new Version(v.base, (v.inserted -- d) ++ i, (v.deleted ++ d) -- i, v.resident)
     if (next.inserted.size + next.deleted.size <= LocalJoinFold.MaxRows) publish(next)
     else compact(next.quads)
   }
@@ -240,7 +255,7 @@ class QuadStore(val spark: SparkSession, initial: DataFrame,
   /** Folds `df` (a whole store's quads) into a new checkpointed base with
     * empty sets. */
   private def compact(df: DataFrame): Unit =
-    publish(new Version(CheckpointBridge.localCheckpointSevered(df), Set.empty, Set.empty))
+    publish(Version(CheckpointBridge.localCheckpointSevered(df)))
 
   private def publish(v: Version): Unit = synchronized {
     version = v
@@ -253,8 +268,33 @@ object QuadStore {
   type Quad = (String, String, String, String)
 
   /** One immutable store version: `base` minus `deleted`, plus `inserted`.
-    * The two sets are disjoint and driver-resident. */
-  final class Version(val base: DataFrame, val inserted: Set[Quad], val deleted: Set[Quad]) {
+    * The two sets are disjoint and driver-resident; `resident` caches the
+    * base's predicate slices and is shared by every version of one base. */
+  final class Version(val base: DataFrame, val inserted: Set[Quad], val deleted: Set[Quad],
+      val resident: ResidentSlices) {
+    /** Per default-graph predicate of the delta: its inserted `(s, o)`
+      * pairs and every `(s, o)` pair it touches. */
+    private lazy val defaultDelta: Map[String, (Seq[(String, String)], Set[(String, String)])] =
+      (inserted.iterator.map(_ -> true) ++ deleted.iterator.map(_ -> false))
+        .filter(_._1._1 == null).toSeq.groupBy(_._1._3).map { case (p, qs) =>
+          p -> (qs.collect { case (q, true) => (q._2, q._4) },
+            qs.iterator.map { case (q, _) => (q._2, q._4) }.toSet)
+        }
+
+    /** This version's default-graph `(s, o)` pairs of each of `ps`: the
+      * base slice minus every pair the delta touches, plus the inserted
+      * ones. None when a slice is oversized, in the base or after the
+      * delta. Fetching unknown base slices may run one Spark job. */
+    def slices(ps: Set[String]): Option[Map[String, ResidentSlices.Pairs]] =
+      resident.get(ps).flatMap { base =>
+        val out = base.map { case (p, pairs) =>
+          p -> defaultDelta.get(p).fold(pairs) { case (ins, touched) =>
+            pairs.filterNot(touched) ++ ins
+          }
+        }
+        if (out.values.forall(_.size <= LocalJoinFold.MaxRows)) Some(out) else None
+      }
+
     /** `(base LEFT ANTI (inserted ∪ deleted) on g <=>, s, p, o) UNION
       * inserted`, both deltas as `LocalRelation`s; the base itself when
       * both sets are empty. */
@@ -268,6 +308,12 @@ object QuadStore {
             col("p") === col("tp") && col("o") === col("to"), "left_anti")
           .unionByName(local(spark, inserted.toSeq))
       }
+  }
+
+  object Version {
+    /** A version of `base` with empty delta sets and a fresh slice cache. */
+    def apply(base: DataFrame): Version =
+      new Version(base, Set.empty, Set.empty, new ResidentSlices(base))
   }
 
   /** A row of an aligned quads frame as a [[Quad]]. */

@@ -1,12 +1,13 @@
 package graft.server
 
+import com.fasterxml.jackson.core.JsonEncoding
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import graft.model.{LocalJoinFold, QuadStore}
 import graft.rdfio.RdfIO
 import graft.reasoner.Reasoner
@@ -77,8 +78,12 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
   /** The server's standing dataset: the provided base store, or one
     * lasting empty store so standard-protocol updates (below) persist for
     * the server's lifetime the way the reference's in-memory database
-    * does (`sparql_database.rs:2078-2107` mutates the live store). */
-  private val serverStore: QuadStore = base.getOrElse(QuadStore.empty(spark))
+    * does (`sparql_database.rs:2078-2107` mutates the live store). It is
+    * long-lived and read again and again, so its reads evaluate small
+    * BGPs on the driver from resident predicate slices, fetched by the
+    * first read that needs them ([[QuadStore.enableResidentReads]]). */
+  private val serverStore: QuadStore =
+    base.getOrElse(QuadStore.empty(spark)).enableResidentReads()
 
   /** One registered RSP session's execution plane. */
   private sealed trait RspBackend {
@@ -343,48 +348,16 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
     accept.contains("application/json") && !accept.contains("sparql-results")
   }
 
-  /** SPARQL 1.1 Query Results JSON (W3C sparql11-results-json) over a
-    * snapshot of the standing store. The store is string-typed, so term
-    * kind is recovered syntactically — `_:` prefix → bnode, an absolute
-    * IRI scheme → uri, anything else → literal — strictly more typing
-    * than the reference's standard-protocol body (tab-separated text with
-    * no typing at all, `sparql_database.rs:2036-2044`). ASK answers the
-    * boolean form. */
+  /** SPARQL 1.1 Query Results JSON ([[GraftHttpServer.sparqlResultsJson]])
+    * over a snapshot of the standing store. */
   private def respondSparqlResults(exchange: HttpExchange, query: String): Unit = {
     // execute, not select: the standard protocol carries ASK/CONSTRUCT/
     // DESCRIBE query forms too, and execute dispatches all of them
     val df = new Compiler(serverStore.snapshot).execute(query)
-    val cols = df.columns
-    val rows = df.collect()
-    val root = mapper.createObjectNode()
     val stripped = GraftHttpServer.PrologueDecl.matcher(query).replaceAll("").trim
-    if (stripped.toLowerCase(java.util.Locale.ROOT).startsWith("ask") &&
-        cols.sameElements(Array("ask"))) {
-      root.putObject("head")
-      root.put("boolean", rows.headOption.exists(_.getBoolean(0)))
-    } else {
-      val vars = root.putObject("head").putArray("vars")
-      cols.foreach(vars.add)
-      val bindings = root.putObject("results").putArray("bindings")
-      rows.foreach { r =>
-        val b = bindings.addObject()
-        cols.zipWithIndex.foreach { case (c, i) =>
-          if (!r.isNullAt(i)) { // unbound variable → key absent, per spec
-            val v = r.get(i).toString
-            val term = b.putObject(c)
-            if (v.startsWith("_:")) {
-              term.put("type", "bnode"); term.put("value", v.substring(2))
-            } else if (GraftHttpServer.IriLike.matcher(v).matches() &&
-                (v.contains("://") || v.startsWith("urn:") || v.startsWith("mailto:"))) {
-              term.put("type", "uri"); term.put("value", v)
-            } else {
-              term.put("type", "literal"); term.put("value", v)
-            }
-          }
-        }
-      }
-    }
-    respond(exchange, 200, root.toString,
+    val ask = stripped.toLowerCase(java.util.Locale.ROOT).startsWith("ask")
+    respondBytes(exchange, 200,
+      GraftHttpServer.sparqlResultsJson(mapper, df.columns.toSeq, df.collect().toSeq, ask),
       contentType = "application/sparql-results+json")
   }
 
@@ -748,8 +721,11 @@ class GraftHttpServer(spark: SparkSession, base: Option[QuadStore] = None,
     respond(exchange, code, body, contentType = "text/html; charset=utf-8")
 
   private def respond(exchange: HttpExchange, code: Int, body: String,
-      contentType: String = "application/json"): Unit = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+      contentType: String = "application/json"): Unit =
+    respondBytes(exchange, code, body.getBytes(StandardCharsets.UTF_8), contentType)
+
+  private def respondBytes(exchange: HttpExchange, code: Int, bytes: Array[Byte],
+      contentType: String): Unit = {
     val headers = exchange.getResponseHeaders
     headers.add("Content-Type", contentType)
     headers.add("Access-Control-Allow-Origin", "*")
@@ -772,6 +748,57 @@ object GraftHttpServer {
 
   /** A results cell that reads as an absolute IRI (`scheme:rest`). */
   private val IriLike = java.util.regex.Pattern.compile("[A-Za-z][A-Za-z0-9+.\\-]*:\\S*")
+
+  /** SPARQL 1.1 Query Results JSON (W3C sparql11-results-json) in UTF-8,
+    * written by one streaming generator. The store is string-typed, so
+    * term kind is recovered syntactically — `_:` prefix → bnode, an
+    * absolute IRI scheme → uri, anything else → literal — strictly more
+    * typing than the reference's standard-protocol body (tab-separated
+    * text with no typing at all, `sparql_database.rs:2036-2044`). An
+    * unbound variable leaves its key out, per spec. An `ask` query whose
+    * only column is `ask` answers the boolean form. */
+  private def sparqlResultsJson(mapper: ObjectMapper, cols: Seq[String],
+      rows: Seq[Row], ask: Boolean): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val g = mapper.getFactory.createGenerator(out, JsonEncoding.UTF8)
+    g.writeStartObject()
+    g.writeObjectFieldStart("head")
+    if (ask && cols == Seq("ask")) {
+      g.writeEndObject()
+      g.writeBooleanField("boolean", rows.headOption.exists(_.getBoolean(0)))
+    } else {
+      g.writeArrayFieldStart("vars")
+      cols.foreach(g.writeString)
+      g.writeEndArray()
+      g.writeEndObject()
+      g.writeObjectFieldStart("results")
+      g.writeArrayFieldStart("bindings")
+      rows.foreach { r =>
+        g.writeStartObject()
+        cols.indices.foreach { i =>
+          if (!r.isNullAt(i)) {
+            val v = r.get(i).toString
+            g.writeObjectFieldStart(cols(i))
+            if (v.startsWith("_:")) {
+              g.writeStringField("type", "bnode"); g.writeStringField("value", v.substring(2))
+            } else {
+              val uri = IriLike.matcher(v).matches() &&
+                (v.contains("://") || v.startsWith("urn:") || v.startsWith("mailto:"))
+              g.writeStringField("type", if (uri) "uri" else "literal")
+              g.writeStringField("value", v)
+            }
+            g.writeEndObject()
+          }
+        }
+        g.writeEndObject()
+      }
+      g.writeEndArray()
+      g.writeEndObject()
+    }
+    g.writeEndObject()
+    g.close()
+    out.toByteArray
+  }
 
   /** A PREFIX or BASE declaration, stripped before the ASK-form check. */
   private val PrologueDecl = java.util.regex.Pattern.compile(

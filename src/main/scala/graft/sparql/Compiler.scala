@@ -3,6 +3,11 @@ package graft.sparql
 import graft.reasoner.Reasoner.RoundCheckpointOps
 import graft.reasoner.RuleBody.termVars
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.graft.PlanBridge
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{QuadStore, TermLex}
@@ -105,13 +110,18 @@ class Compiler(store: QuadStore,
         * constant-folded `xxhash64` literals) without round-tripping
         * through the lexical view. */
       fromGraphs: Seq[String] = Nil,
-      fromNamed: Seq[String] = Nil)
+      fromNamed: Seq[String] = Nil,
+      /** The store version whose resident predicate slices this view's
+        * default-graph BGPs may join on the driver ([[residentBgp]]):
+        * set for reads of the physical dataset of a store that serves
+        * resident reads. */
+      resident: Option[QuadStore.Version] = None)
 
   def buildView(fromGraphs: Seq[String], fromNamed: Seq[String]): View = {
     val q = store.quads
     if (fromGraphs.isEmpty && fromNamed.isEmpty)
       View(q.filter(col("g").isNull).select("s", "p", "o"), q.filter(col("g").isNotNull),
-        physicalDataset = true)
+        physicalDataset = true, resident = store.residentVersion)
     else {
       val d =
         if (fromGraphs.isEmpty) q.filter(lit(false)).select("s", "p", "o")
@@ -397,6 +407,10 @@ class Compiler(store: QuadStore,
           case _: Quoted => false; case _ => true
         }))
       return Some(compileBgpEncoded(patterns, scope, view))
+    if (input.isEmpty && scope == DefaultGraph) {
+      val local = view.resident.flatMap(residentBgp(patterns, _))
+      if (local.isDefined) return local
+    }
     // star routing: a pure subject star over the physical default graph
     // reads the CLUSTERED BY (s) twin — its p-filtered scans arrive
     // co-partitioned on the join key, so the star chain shuffles nothing
@@ -416,6 +430,33 @@ class Compiler(store: QuadStore,
       acc = Some(acc.map(a => compatJoin(a, scan)).getOrElse(scan))
     }
     acc
+  }
+
+  /** A default-graph BGP evaluated on the driver from the version's
+    * resident predicate slices, handed to Catalyst as one `LocalRelation`
+    * holding its result, so FILTER, projection and LIMIT above it fold
+    * with no Spark job (`ConvertToLocalRelation`). It produces the rows
+    * and columns of the scan-and-join plan below: scans in [[greedyOrder]],
+    * each hash-joined on the shared variables in [[compatJoin]]'s column
+    * order. None, leaving the BGP to that plan, when a pattern's predicate
+    * is not a constant IRI, a pattern holds a quoted triple, a slice is
+    * oversized, or an intermediate result exceeds `LocalJoinFold.MaxRows`
+    * rows. Reading unknown slices may run one Spark job. */
+  private def residentBgp(patterns: Seq[TriplePattern],
+      version: QuadStore.Version): Option[Bindings] = {
+    val preds = patterns.map {
+      case TriplePattern(s, Iri(p), o) if !s.isInstanceOf[Quoted] && !o.isInstanceOf[Quoted] =>
+        Some(p)
+      case _ => None
+    }
+    if (preds.exists(_.isEmpty)) return None
+    version.slices(preds.flatten.toSet)
+      .flatMap(LocalBgp.evaluate(greedyOrder(patterns, DefaultGraph, Set.empty), _))
+      .map { rel =>
+        val attrs = rel.cols.map(c => AttributeReference(c, StringType, nullable = false)())
+        val data = rel.rows.map(r => InternalRow.fromSeq(r.map(UTF8String.fromString).toSeq))
+        Bindings(PlanBridge.ofAnalyzed(spark, LocalRelation(attrs, data)), Set.empty)
+      }
   }
 
   /** Dictionary-encoded BGP evaluation ([[graft.model.QuadStore.dictEncoded]],
@@ -1087,7 +1128,8 @@ class Compiler(store: QuadStore,
     case InsertData(qs) => store.updateQuads(Nil, constQuads(qs))
     case DeleteData(qs) => store.updateQuads(constQuads(qs), Nil)
     case Modify(del, ins, where) =>
-      val view = buildView(Nil, Nil)
+      // an update's WHERE keeps the scan-and-join plan
+      val view = buildView(Nil, Nil).copy(resident = None)
       // templates instantiate from LEXICAL bindings
       val b = decodeAll(
         compileGroup(where, DefaultGraph, view, None).getOrElse(unitBindings))

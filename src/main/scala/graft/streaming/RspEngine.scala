@@ -99,6 +99,31 @@ object RspEngine {
         "such windows never fire). Use TICK TIME_DRIVEN or omit the clause.")
     }
 
+  /** Whether `elems` hold, in any nested group, a property path with a
+    * `+` or `*` step: the forms whose closure the compiler computes (and
+    * checkpoints) while compiling. */
+  private def hasClosurePath(elems: Seq[Element]): Boolean = {
+    def closes(p: Path): Boolean = p match {
+      case POneOrMore(_) | PZeroOrMore(_) => true
+      case PInv(x) => closes(x)
+      case PZeroOrOne(x) => closes(x)
+      case PSeq(l, r) => closes(l) || closes(r)
+      case PAlt(l, r) => closes(l) || closes(r)
+      case PLink(_) | PNeg(_, _) => false
+    }
+    elems.exists {
+      case PathPattern(_, p, _) => closes(p)
+      case GraphBlock(_, es) => hasClosurePath(es)
+      case UnionBlock(bs) => bs.exists(hasClosurePath)
+      case OptionalBlock(es) => hasClosurePath(es)
+      case MinusBlock(es) => hasClosurePath(es)
+      case SubSelect(q) => hasClosurePath(q.where)
+      case FilterElem(ExistsCond(es, _)) => hasClosurePath(es)
+      case WindowBlockElem(_, es) => hasClosurePath(es)
+      case _ => false
+    }
+  }
+
   /** Cross-window SDS+ mode (`rsp_engine.rs:293-295,1213-1268`): N3-logic
     * rules over the UNION of all windows' latest raw contents, each fact
     * expiry-tagged with ITS window's width as α; the window blocks then
@@ -454,9 +479,11 @@ class RspEngine(
 
   /** The block compiled over a placeholder content store, kept when every
     * leaf of its plan is the placeholder, VALUES rows or `range(1)` —
-    * anything else (a property path's checkpointed closure) was read at
-    * compile time and would go stale. */
+    * anything else was read at compile time and would go stale. A block
+    * with an arbitrary-length property path is not compiled here at all:
+    * its closure is checkpointed, with Spark jobs, while compiling. */
   private def prepareBlock(blockElems: Seq[Element]): Option[Prepared] = {
+    if (hasClosurePath(blockElems)) return None
     val p = prepare(Seq(QuadStore.schema))(in =>
       compileBlock(blockElems, QuadStore(spark, in.head)))
     val fixed = p.plan.collectWithSubqueries { case l: LeafNode => l }.forall {

@@ -5,6 +5,7 @@ import graft.SparkSpec
 import graft.model.QuadStore
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.jdk.CollectionConverters._
 
 /** SPARQL HTTP protocol endpoint semantics, mirroring the reference's
   * `kolibrie-http-server` request/response contract
@@ -548,5 +549,171 @@ class HttpServerSpec extends SparkSpec {
       sc.removeSparkListener(listener)
       srv.stop()
     }
+  }
+
+  /** Counts the Spark jobs the server's requests start: jobs in a
+    * `graft-http-*` group, once a marker job shows the listener bus has
+    * delivered every earlier one. */
+  private final class RequestJobs extends org.apache.spark.scheduler.SparkListener {
+    private val sc = spark.sparkContext
+    private val marker = "http-spec-jobs-marker"
+    @volatile private var markers, jobs = 0
+    override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      val group = Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse("")
+      if (group == marker) markers += 1
+      else if (group.startsWith("graft-http-")) jobs += 1
+    }
+    def of[T](body: => T): (T, Int) = {
+      val before = jobs
+      val out = body
+      val m = markers
+      sc.setJobGroup(marker, null)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (markers == m && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markers > m)
+      (out, jobs - before)
+    }
+  }
+
+  private def withRequestJobs(body: RequestJobs => Unit): Unit = {
+    val l = new RequestJobs
+    spark.sparkContext.addSparkListener(l)
+    try body(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def sparqlPost(port: Int, contentType: String, body: String): HttpResponse[String] = {
+    val resp = client.send(
+      HttpRequest.newBuilder(new URI(s"http://localhost:$port/query"))
+        .header("Content-Type", contentType)
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(resp.statusCode() == 200, resp.body())
+    resp
+  }
+
+  /** A read's bindings as sorted `var=value` rows. */
+  private def bindings(body: String): Seq[String] = {
+    val b = mapper.readTree(body).get("results").get("bindings")
+    (0 until b.size()).map { i =>
+      b.get(i).fields().asScala.map(e => s"${e.getKey}=${e.getValue.get("value").asText()}")
+        .toSeq.sorted.mkString(" ")
+    }.sorted
+  }
+
+  test("reads of a parquet-backed standing store run from resident slices: zero jobs when warm") {
+    val store = graft.relational.Triplizer.isolatedStore(spark, sf())
+    val srv = new GraftHttpServer(spark, Some(store)).start()
+    def read(q: String) = sparqlPost(srv.port, "application/sparql-query", q).body()
+    def update(u: String) = sparqlPost(srv.port, "application/sparql-update", u)
+    val l1 = graft.queries.WatDivSuite.sparqlText("sparql_watdiv_l1")
+    val l3 = graft.queries.WatDivSuite.sparqlText("sparql_watdiv_l3")
+    val names = "SELECT ?r ?n WHERE { ?r <region#r_name> ?n }"
+    val tagged = "SELECT ?s ?v WHERE { ?s <http://ex.org/tag> ?v }"
+    val both = "SELECT ?n ?v WHERE { ?r <region#r_name> ?n . ?r <http://ex.org/tag> ?v }"
+    try withRequestJobs { jobs =>
+      // the first read fetches its four predicates with one job
+      val (cold, coldJobs) = jobs.of(read(l1))
+      assert(coldJobs == 1)
+      val (warm, warmJobs) = jobs.of(read(l1))
+      assert(warmJobs == 0)
+      assert(bindings(warm) == bindings(cold) && bindings(warm).nonEmpty)
+      assert(jobs.of(read(l3))._2 == 1)
+      val (regions, regionJobs) = jobs.of(bindings(read(names)))
+      assert(regionJobs == 0 && regions.size == 5) // L1 fetched region#r_name
+      // a base quad deleted, one inserted, and a predicate new to the store
+      val Array(n0, r0) = regions.head.stripPrefix("n=").split(" r=")
+      update(s"""DELETE DATA { <$r0> <region#r_name> "$n0" }""")
+      update("""INSERT DATA { <region/9> <region#r_name> "MARS" .
+        <region/9> <http://ex.org/tag> "t9" . <x/1> <http://ex.org/tag> "t1" }""")
+      val (after, afterJobs) = jobs.of(bindings(read(names)))
+      assert(afterJobs == 0)
+      assert(after == (regions.tail :+ "n=MARS r=region/9").sorted)
+      // a predicate new to the store costs one fetch, of its empty base slice
+      val (tags, tagJobs) = jobs.of(bindings(read(tagged)))
+      assert(tagJobs == 1 && tags == Seq("s=region/9 v=t9", "s=x/1 v=t1"))
+      val (joined, joinJobs) = jobs.of(bindings(read(both)))
+      assert(joinJobs == 0 && joined == Seq("n=MARS v=t9"))
+      update("""DELETE DATA { <x/1> <http://ex.org/tag> "t1" }""")
+      assert(jobs.of(bindings(read(tagged))) == (Seq("s=region/9 v=t9"), 0))
+      assert(jobs.of(bindings(read(l1))) == (bindings(cold), 0))
+    } finally srv.stop()
+  }
+
+  test("a read over a predicate with more than MaxRows rows answers through the Spark plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-http-big")
+    val big = graft.model.LocalJoinFold.MaxRows + 100
+    val quads = (0 until big).map(i => org.apache.spark.sql.Row(null, s"http://ex.org/s${i % 100}",
+      "http://ex.org/big", s"v$i")) ++
+      (0 until 100 by 7).map(i => org.apache.spark.sql.Row(null, s"http://ex.org/s$i",
+        "http://ex.org/small", s"w$i"))
+    spark.createDataFrame(spark.sparkContext.parallelize(quads, 2), QuadStore.schema)
+      .write.parquet(dir.resolve("quads").toString)
+    val df = spark.read.parquet(dir.resolve("quads").toString)
+    val srv = new GraftHttpServer(spark, Some(QuadStore(spark, df))).start()
+    val q = """SELECT ?s ?v ?w WHERE { ?s <http://ex.org/big> ?v . ?s <http://ex.org/small> ?w .
+      FILTER(?w != "w14") }"""
+    try withRequestJobs { jobs =>
+      val want = new graft.sparql.Compiler(QuadStore(spark, df)).select(q).collect()
+        .map(r => s"s=${r.getString(0)} v=${r.getString(1)} w=${r.getString(2)}").toSeq.sorted
+      assert(want.nonEmpty)
+      Seq(1, 2).foreach { _ =>
+        val (got, n) = jobs.of(bindings(sparqlPost(srv.port, "application/sparql-query", q).body()))
+        assert(got == want)
+        assert(n > 0)
+      }
+    } finally {
+      srv.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("SPARQL results JSON from the streaming generator matches the tree-built body") {
+    val store = QuadStore.fromTriples(spark, Seq(
+      ("_:b1", "http://ex.org/p", "http://ex.org/o"),
+      ("http://ex.org/s", "http://ex.org/p", "lit \"quoted\" \u00e9\n"),
+      ("http://ex.org/s", "http://ex.org/q", "urn:x:1")))
+    val srv = new GraftHttpServer(spark, Some(store)).start()
+    /** The body as the server built it before: a Jackson tree. */
+    def treeBody(q: String): String = {
+      val df = new graft.sparql.Compiler(store).execute(q)
+      val cols = df.columns
+      val rows = df.collect()
+      val root = mapper.createObjectNode()
+      if (q.trim.toLowerCase.startsWith("ask") && cols.sameElements(Array("ask"))) {
+        root.putObject("head")
+        root.put("boolean", rows.headOption.exists(_.getBoolean(0)))
+      } else {
+        val vars = root.putObject("head").putArray("vars")
+        cols.foreach(vars.add)
+        val bs = root.putObject("results").putArray("bindings")
+        rows.foreach { r =>
+          val b = bs.addObject()
+          cols.zipWithIndex.foreach { case (c, i) =>
+            if (!r.isNullAt(i)) {
+              val v = r.get(i).toString
+              val term = b.putObject(c)
+              if (v.startsWith("_:")) {
+                term.put("type", "bnode"); term.put("value", v.substring(2))
+              } else if (v.matches("[A-Za-z][A-Za-z0-9+.\\-]*:\\S*") &&
+                  (v.contains("://") || v.startsWith("urn:") || v.startsWith("mailto:"))) {
+                term.put("type", "uri"); term.put("value", v)
+              } else {
+                term.put("type", "literal"); term.put("value", v)
+              }
+            }
+          }
+        }
+      }
+      root.toString
+    }
+    try Seq(
+      "SELECT ?s ?o ?z WHERE { ?s <http://ex.org/p> ?o OPTIONAL { ?s <http://ex.org/q> ?z } } ORDER BY ?s",
+      "ASK { ?s <http://ex.org/q> ?z }",
+      "ASK { ?s <http://ex.org/r> ?z }").foreach { q =>
+      val body = sparqlPost(srv.port, "application/sparql-query", q).body()
+      assert(body == treeBody(q), q)
+    } finally srv.stop()
   }
 }
