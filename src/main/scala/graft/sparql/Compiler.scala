@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
@@ -47,9 +48,12 @@ object Compiler {
     * encoded BGP path defers decode past the BGP boundary — SURVEY §1.5
     * phase 2): joins/grouping/DISTINCT run on ids, and [[Compiler]]
     * decodes exactly where lexical semantics are needed (FILTER/BIND
-    * inputs, aggregate inputs, ORDER keys) or at output. */
+    * inputs, aggregate inputs, ORDER keys) or at output. `keys` are
+    * never-null key columns carried beside the variables (the RSP planes'
+    * window `close`/`closeTs`, [[Compiler.compileKeyed]]): every compat
+    * operation joins on them and the modifiers keep them. */
   final case class Bindings(df: DataFrame, maybeNull: Set[String],
-      encoded: Set[String] = Set.empty) {
+      encoded: Set[String] = Set.empty, keys: Seq[String] = Nil) {
     def vars: Set[String] = df.columns.toSet
   }
 
@@ -115,7 +119,9 @@ class Compiler(store: QuadStore,
         * default-graph BGPs may join on the driver ([[residentBgp]]):
         * set for reads of the physical dataset of a store that serves
         * resident reads. */
-      resident: Option[QuadStore.Version] = None)
+      resident: Option[QuadStore.Version] = None,
+      /** Key columns of every row of `default` ([[compileKeyed]]). */
+      keys: Seq[String] = Nil)
 
   def buildView(fromGraphs: Seq[String], fromNamed: Seq[String]): View = {
     val q = store.quads
@@ -139,6 +145,23 @@ class Compiler(store: QuadStore,
   private def unitBindings: Bindings =
     Bindings(spark.range(1).select(), Set.empty)
 
+  /** The empty solution of a group over `view`: one row, or one row per
+    * key of keyed content. */
+  private def unitOf(view: View): Bindings =
+    if (view.keys.isEmpty) unitBindings
+    else {
+      require(!view.default.isStreaming,
+        "a group that starts without a pattern needs each key's full row set, " +
+          "which an unbounded stream never completes")
+      Bindings(view.default.select(view.keys.map(col): _*).distinct(), Set.empty,
+        keys = view.keys)
+    }
+
+  /** `b` with the view's keys: a keyless solution (VALUES) holds for every
+    * key, so it crosses the key set. */
+  private def keyed(b: Bindings, view: View): Bindings =
+    if (view.keys.isEmpty || b.keys.nonEmpty) b else compatJoin(unitOf(view), b)
+
   /** Decode the given id-carrying columns back to lexical form — one
     * equi-join per column against [[graft.model.QuadStore.termsTable]].
     * No-op for columns not (or no longer) encoded. Called exactly where
@@ -157,7 +180,7 @@ class Compiler(store: QuadStore,
         .drop(v, s"__tid_$v")
         .withColumnRenamed(s"__lex_$v", v)
     }
-    Bindings(df, b.maybeNull, b.encoded -- todo)
+    b.copy(df = df, encoded = b.encoded -- todo)
   }
 
   private def decodeAll(b: Bindings): Bindings = decode(b, b.encoded)
@@ -256,6 +279,21 @@ class Compiler(store: QuadStore,
     finalizeSelect(b, sel, subquery = false)
   }
 
+  /** Compile a group over key-carrying default-graph content: `content`
+    * holds `keys` beside `s, p, o` (the RSP planes' window content keyed by
+    * close), and one plan answers the group for every key at once. Every
+    * scan, path, UNION branch and subselect keeps the keys, and every compat
+    * operation joins on them; [[finalizeSelect]] groups, deduplicates and
+    * ranks per key. On a stream, what needs a key's complete rows is
+    * refused (closures, zero-length paths, subselects, a group that starts
+    * without a pattern), and so are UNDEF-tolerant joins of two streams. */
+  def compileKeyed(content: DataFrame, keys: Seq[String], elems: Seq[Element]): Bindings = {
+    val triples = content.select((keys ++ Seq("s", "p", "o")).map(col): _*)
+    val view = View(triples,
+      triples.withColumn("g", lit(null).cast(StringType)).filter(lit(false)), keys = keys)
+    compileGroup(elems, DefaultGraph, view, None).getOrElse(unitOf(view))
+  }
+
   // ---- group graph pattern -----------------------------------------------
 
   private def compileGroup(elems: Seq[Element], scope: GraphSpec, view: View,
@@ -286,13 +324,13 @@ class Compiler(store: QuadStore,
             .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
           val nullable = compiled.flatMap(_.maybeNull).toSet ++
             allVars.filterNot(v => compiled.forall(_.vars.contains(v)))
-          acc = Some(Bindings(merged, nullable))
+          acc = Some(Bindings(merged, nullable, keys = view.keys))
         }
       case BindElem(expr, v) =>
-        val b = decode(acc.getOrElse(unitBindings), exprVars(expr))
-        acc = Some(Bindings(
-          b.df.withColumn(v, compileExpr(b.df, expr).cast(StringType)),
-          b.maybeNull + v, b.encoded)) // BIND may evaluate to error/unbound → null
+        val b = decode(acc.getOrElse(unitOf(view)), exprVars(expr))
+        acc = Some(b.copy(
+          df = b.df.withColumn(v, compileExpr(b.df, expr).cast(StringType)),
+          maybeNull = b.maybeNull + v)) // BIND may evaluate to error/unbound → null
       case ValuesElem(vars, rows) =>
         val schema = StructType(vars.map(v => StructField(v, StringType, nullable = true)))
         val data = rows.map(r => Row(r.map(_.map(TermLex.lexical).orNull): _*))
@@ -315,11 +353,11 @@ class Compiler(store: QuadStore,
         // SPARQL left join (extension): left rows always survive, optional
         // vars pad with UNDEF/null on no match
         compileGroup(inner, scope, view, None).foreach { r =>
-          acc = Some(compatLeftJoin(acc.getOrElse(unitBindings), r))
+          acc = Some(compatLeftJoin(keyed(acc.getOrElse(unitOf(view)), view), r))
         }
       case MinusBlock(inner) =>
         compileGroup(inner, scope, view, None).foreach { r =>
-          acc.foreach(l => acc = Some(compatMinus(l, r)))
+          acc.foreach(l => acc = Some(compatMinus(keyed(l, view), r)))
         }
       case PathPattern(s, path, o) =>
         val pb = compilePathPattern(s, path, o, scope, view)
@@ -328,15 +366,15 @@ class Compiler(store: QuadStore,
     }
     filters.foreach { case FilterElem(cond) =>
       // FILTER semantics are lexical/numeric — decode exactly its inputs
-      val b = decode(acc.getOrElse(unitBindings), condVars(cond))
-      acc = Some(Bindings(b.df.filter(compileCond(b.df, cond)), b.maybeNull, b.encoded))
+      val b = decode(acc.getOrElse(unitOf(view)), condVars(cond))
+      acc = Some(b.copy(df = b.df.filter(compileCond(b.df, cond))))
     }
     existsFilters.foreach { case FilterElem(ExistsCond(inner, negated)) =>
-      val left = acc.getOrElse(unitBindings)
-      val right = compileGroup(inner, scope, view, None).getOrElse(unitBindings)
+      val left = keyed(acc.getOrElse(unitOf(view)), view)
+      val right = compileGroup(inner, scope, view, None).getOrElse(unitOf(view))
       acc = Some(compatSemiJoin(left, right, anti = negated))
     }
-    acc
+    acc.map(keyed(_, view))
   }
 
   def compileSubSelect(sub: Select): Bindings =
@@ -348,13 +386,20 @@ class Compiler(store: QuadStore,
       if (sub.fromGraphs.nonEmpty || sub.fromNamed.nonEmpty)
         (DefaultGraph, buildView(sub.fromGraphs, sub.fromNamed))
       else (outerScope, outerView)
-    val b = compileGroup(sub.where, scope, view, None).getOrElse(unitBindings)
+    // keyed content may repeat a triple (one row per arrival); a subselect
+    // aggregates and limits each key's triples as the set a store holds.
+    // Partitioned by the keys, the deduplication's shuffle is also the one
+    // the per-key rank needs.
+    val inner =
+      if (view.keys.isEmpty) view
+      else view.copy(default = view.default.repartition(view.keys.map(col): _*).distinct())
+    val b = compileGroup(sub.where, scope, inner, None).getOrElse(unitOf(inner))
     val df = finalizeSelect(b, sub, subquery = true)
     // aggregate aliases CAN be null (MIN/MAX/SUM/AVG over an
     // all-non-numeric group) — outer joins must stay UNDEF-tolerant
     val aggAliases = sub.aggregates.map(_.alias).toSet
     Bindings(df,
-      (b.maybeNull ++ aggAliases).intersect(df.columns.toSet))
+      (b.maybeNull ++ aggAliases).intersect(df.columns.toSet), keys = b.keys)
   }
 
   // ---- BGP ---------------------------------------------------------------
@@ -402,7 +447,7 @@ class Compiler(store: QuadStore,
     if (patterns.isEmpty) return input
     // encoded fast path: id-space scans re-scope FROM / FROM NAMED views
     // directly on g_id (constant-folded xxhash64 literals)
-    if (store.dictEncoded && input.isEmpty &&
+    if (store.dictEncoded && input.isEmpty && view.keys.isEmpty &&
         patterns.forall(tp => Seq(tp.s, tp.p, tp.o).forall {
           case _: Quoted => false; case _ => true
         }))
@@ -508,8 +553,7 @@ class Compiler(store: QuadStore,
       val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
       val filtered = (filters ++ eqs).foldLeft(base)((d, f) => d.filter(f))
       val outCols = grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq
-      if (outCols.nonEmpty) filtered.select(outCols: _*)
-      else filtered.select(lit(1).as("__exists")).limit(1).select()
+      bound(filtered, outCols, Nil)
     }
     // same planner as the direct path by construction
     var acc: Option[DataFrame] = None
@@ -527,6 +571,12 @@ class Compiler(store: QuadStore,
 
   // ---- property paths (extension) ----------------------------------------
 
+  /** The columns a path's edge relation carries beside `(__ps, __po)`: the
+    * view's keys and a GRAPH ?g scope's variable. They ride every join,
+    * union and closure round, so a path stays within one key and one graph. */
+  private def pathCarried(scope: GraphSpec, view: View): Seq[String] =
+    view.keys ++ (scope match { case GraphVar(v) => Seq(v); case _ => Nil })
+
   /** Path → edge relation with columns (__ps, __po). Sequence/alternative
     * keep bag semantics (plain join/union — SPARQL 1.1 §9.3); the
     * arbitrary-length forms are set-based by spec and compile to the
@@ -534,10 +584,7 @@ class Compiler(store: QuadStore,
     * ([[graft.reasoner.Reasoner]]): O(log diameter) self-join rounds,
     * each `localCheckpoint`ed to truncate plan lineage. */
   private def pathEdges(p: Path, scope: GraphSpec, view: View): DataFrame = {
-    // a GRAPH ?g scope binds the graph var on every scan — it rides every
-    // join/union/closure as an extra key (a path stays within ONE graph),
-    // exactly like the RSP plane's close keys
-    val extra: Seq[String] = scope match { case GraphVar(v) => Seq(v); case _ => Nil }
+    val extra = pathCarried(scope, view)
     def keep(df: DataFrame, ps: Column, po: Column): DataFrame =
       df.select((extra.map(col) :+ ps.as("__ps") :+ po.as("__po")): _*)
     p match {
@@ -581,7 +628,10 @@ class Compiler(store: QuadStore,
     * scoped graph relates to itself (SPARQL 1.1 §9.3 ZeroLengthPath over
     * graph terms). */
   private def pathIdentity(scope: GraphSpec, view: View): DataFrame = {
-    val extra: Seq[String] = scope match { case GraphVar(v) => Seq(v); case _ => Nil }
+    require(!view.default.isStreaming,
+      "a zero-length path needs each key's full node set, which an unbounded " +
+        "stream never completes")
+    val extra = pathCarried(scope, view)
     val all = scanPattern(
       TriplePattern(Var("__ns"), Var("__np"), Var("__no")), scope, view).df
     all.select((extra.map(col) :+ col("__ns").as("__n")): _*)
@@ -591,21 +641,25 @@ class Compiler(store: QuadStore,
   }
 
   /** Transitive closure by recursive doubling: R ← R ∪ R∘R until the
-    * count fixes. log₂(diameter) driver-paced rounds — a 10K-deep chain
-    * closes in 14 rounds (same scaling argument as DoublingSpec). */
-  private def pathClosure(edges: DataFrame, extra: Seq[String] = Nil): DataFrame = {
-    var r = edges.distinct().localCheckpointSevered()
-    var n = r.count()
+    * count fixes, joining on the `extra` columns too. log₂(diameter)
+    * driver-paced rounds of one action each (checkpoint and count fused);
+    * each round drops the previous round's blocks. A 10K-deep chain closes
+    * in 14 rounds (same scaling argument as DoublingSpec). */
+  private def pathClosure(edges: DataFrame, extra: Seq[String]): DataFrame = {
+    require(!edges.isStreaming,
+      "an arbitrary-length path needs a fixpoint, which a micro-batch stream " +
+        "cannot loop")
+    var (r, n) = edges.distinct().localCheckpointSeveredCounted()
     var done = false
     while (!done) {
-      val next = r.unionByName(
+      val (next, m) = r.unionByName(
           r.withColumnRenamed("__po", "__m")
             .join(r.withColumnRenamed("__ps", "__m"), extra :+ "__m", "inner")
             .select((extra.map(col) :+ col("__ps") :+ col("__po")): _*))
-        .distinct().localCheckpointSevered()
-      val m = next.count()
+        .distinct().localCheckpointSeveredCounted()
       done = m == n
       n = m
+      graft.reasoner.Reasoner.unpersistCheckpoint(r)
       r = next
     }
     r
@@ -613,21 +667,23 @@ class Compiler(store: QuadStore,
 
   private def compilePathPattern(s: Term, path: Path, o: Term,
       scope: GraphSpec, view: View): Bindings = {
-    val extraVars: Seq[String] = scope match { case GraphVar(v) => Seq(v); case _ => Nil }
+    val graphVar = scope match { case GraphVar(v) => Some(v); case _ => None }
     val e0 = pathEdges(path, scope, view)
     // SPARQL 1.1 §18.4 ZeroLengthPath relates a GROUND endpoint to itself
     // even when the term is absent from the graph — pathIdentity only
     // covers graph nodes, so union the ground endpoints' identity rows
-    // for the zero-admitting forms (default-graph scope; a GRAPH ?g
-    // zero-length over an absent term has no graph to bind)
+    // for the zero-admitting forms, under every key (default-graph scope;
+    // a GRAPH ?g zero-length over an absent term has no graph to bind)
     val zeroAdmitting = path match {
       case PZeroOrMore(_) | PZeroOrOne(_) => true
       case _ => false
     }
     val groundEnds = Seq(s, o).filter(termVars(_).isEmpty).map(TermLex.lexical).distinct
-    val e = if (zeroAdmitting && groundEnds.nonEmpty && extraVars.isEmpty) {
+    val e = if (zeroAdmitting && groundEnds.nonEmpty && graphVar.isEmpty) {
       import e0.sparkSession.implicits._
-      e0.unionByName(groundEnds.map(t => (t, t)).toDF("__ps", "__po")).distinct()
+      val ends = groundEnds.map(t => (t, t)).toDF("__ps", "__po")
+      e0.unionByName(if (view.keys.isEmpty) ends else unitOf(view).df.crossJoin(ends))
+        .distinct()
     } else e0
     var filters = List.empty[Column]
     var binds = List.empty[(String, Column)]
@@ -639,15 +695,22 @@ class Compiler(store: QuadStore,
         filters ::= (c === lit(TermLex.lexical(other)))
     }
     walkEnd(col("__ps"), s); walkEnd(col("__po"), o)
-    extraVars.foreach(v => binds ::= (v -> col(v))) // GRAPH ?g rides along
+    graphVar.foreach(v => binds ::= (v -> col(v))) // GRAPH ?g rides along
     val grouped = binds.reverse.groupBy(_._1)
     val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
     val filtered = (filters ++ eqs).foldLeft(e)((d, f) => d.filter(f))
     val outCols = grouped.map { case (n, cs) => cs.head._2.as(n) }.toSeq
-    val df = if (outCols.nonEmpty) filtered.select(outCols: _*)
-             else filtered.select(lit(1).as("__exists")).limit(1).select()
-    Bindings(df, Set.empty)
+    Bindings(bound(filtered, outCols, view.keys), Set.empty, keys = view.keys)
   }
+
+  /** A scan's solutions: the keys, then the bound columns. With nothing
+    * bound, whether a row matched: one row, or each key with a match once
+    * (on a stream, which cannot deduplicate here, once per match). */
+  private def bound(filtered: DataFrame, outCols: Seq[Column], keys: Seq[String]): DataFrame =
+    if (outCols.nonEmpty) filtered.select((keys.map(col) ++ outCols): _*)
+    else if (keys.isEmpty) filtered.select(lit(1).as("__exists")).limit(1).select()
+    else if (filtered.isStreaming) filtered.select(keys.map(col): _*)
+    else filtered.select(keys.map(col): _*).distinct()
 
   /** One triple-pattern scan: filter on constant positions (pushed to the
     * Parquet reader by Catalyst — the Spark replacement for the reference's
@@ -656,7 +719,9 @@ class Compiler(store: QuadStore,
   private def scanPattern(tp: TriplePattern, scope: GraphSpec, view: View): Bindings = {
     val (base, gBind) = scope match {
       case DefaultGraph => (view.default, None)
-      case GraphIri(g) => (view.named.filter(col("g") === lit(g)).select("s", "p", "o"), None)
+      case GraphIri(g) =>
+        (view.named.filter(col("g") === lit(g))
+          .select((view.keys ++ Seq("s", "p", "o")).map(col): _*), None)
       case GraphVar(v) => (view.named, Some(v))
     }
     var filters = List.empty[Column]
@@ -684,9 +749,7 @@ class Compiler(store: QuadStore,
     val eqFilters = grouped.values.flatMap(cs => cs.tail.map(c => c._2 === cs.head._2))
     val allFilters = filters ++ eqFilters
     val filtered = allFilters.foldLeft(base)((d, f) => d.filter(f))
-    val df = if (outCols.nonEmpty) filtered.select(outCols: _*)
-             else filtered.select(lit(1).as("__exists")).limit(1).select()
-    Bindings(df, Set.empty)
+    Bindings(bound(filtered, outCols, view.keys), Set.empty, keys = view.keys)
   }
 
   /** Solution-sequence join (`engine.rs:1137-1160`): equi-join on shared
@@ -695,38 +758,24 @@ class Compiler(store: QuadStore,
     * encoded on BOTH sides join on their ids (the co-encoded fast path);
     * a var encoded on only one side decodes first. */
   def compatJoin(l0: Bindings, r0: Bindings): Bindings = {
-    val shared0 = l0.df.columns.filter(r0.df.columns.contains(_)).toSet
-    // decode where the other side carries lexical values
-    val l = decode(l0, shared0.filterNot(r0.encoded))
-    val r = decode(r0, shared0.filterNot(l0.encoded))
+    val (l, r, shared) = aligned(l0, r0)
     val stillEncoded = l.encoded ++ r.encoded
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
+    val keys = (l.keys ++ r.keys).distinct
     if (shared.isEmpty)
-      return Bindings(l.df.crossJoin(r.df), l.maybeNull ++ r.maybeNull, stillEncoded)
+      return Bindings(l.df.crossJoin(r.df), l.maybeNull ++ r.maybeNull, stillEncoded, keys)
     val nullableShared = shared.filter(c => l.maybeNull(c) || r.maybeNull(c))
     if (nullableShared.isEmpty) {
       val joined = l.df.join(r.df, shared, "inner")
-      Bindings(joined, l.maybeNull ++ r.maybeNull -- shared, stillEncoded)
+      Bindings(joined, l.maybeNull ++ r.maybeNull -- shared, stillEncoded, keys)
     } else {
-      val pre = "__graft_r_"
-      val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
-      val cond = shared.map { c =>
-        if (nullableShared.contains(c))
-          col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-        else col(c) === col(pre + c)
-      }.reduce(_ && _)
-      var out = l.df.join(rr, cond, "inner")
-      shared.foreach { c =>
-        out = out.withColumn(c, coalesce(col(c), col(pre + c))).drop(pre + c)
-      }
-      r.df.columns.filterNot(shared.contains).foreach { c =>
-        out = out.withColumnRenamed(pre + c, c)
-      }
+      requireEquiOnStreams(l, r, nullableShared)
+      val out = merged(l.df.join(renamedRight(r.df), compatCond(shared, nullableShared), "inner"),
+        shared, r.df.columns.filterNot(shared.contains).toSeq)
       val stillNullable = (l.maybeNull ++ r.maybeNull).filter { v =>
         if (shared.contains(v)) l.maybeNull(v) && r.maybeNull(v)
         else true
       }
-      Bindings(out, stillNullable, stillEncoded)
+      Bindings(out, stillNullable, stillEncoded, keys)
     }
   }
 
@@ -735,31 +784,26 @@ class Compiler(store: QuadStore,
     * unmatched left rows keep their values and right-only vars pad with
     * null. Optional vars are maybeNull downstream by construction. */
   def compatLeftJoin(l0: Bindings, r0: Bindings): Bindings = {
-    val shared0 = l0.df.columns.filter(r0.df.columns.contains(_)).toSet
-    val l = decode(l0, shared0.filterNot(r0.encoded))
-    val r = decode(r0, shared0.filterNot(l0.encoded))
+    val (l, r, shared) = aligned(l0, r0)
     val stillEncoded = l.encoded ++ r.encoded
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
+    val keys = (l.keys ++ r.keys).distinct
     val rightOnly = r.df.columns.filterNot(shared.contains).toSeq
     if (shared.isEmpty)
       return Bindings(l.df.join(r.df, lit(true), "left_outer"),
-        l.maybeNull ++ r.maybeNull ++ rightOnly, stillEncoded)
-    val pre = "__graft_r_"
-    val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
+        l.maybeNull ++ r.maybeNull ++ rightOnly, stillEncoded, keys)
     val nullableShared = shared.filter(c => l.maybeNull(c) || r.maybeNull(c))
-    val cond = shared.map { c =>
-      if (nullableShared.contains(c))
-        col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-      else col(c) === col(pre + c)
-    }.reduce(_ && _)
-    var out = l.df.join(rr, cond, "left_outer")
-    shared.foreach { c =>
-      out = out.withColumn(c, coalesce(col(c), col(pre + c))).drop(pre + c)
-    }
-    rightOnly.foreach { c => out = out.withColumnRenamed(pre + c, c) }
+    val out =
+      // two streams join on equality keys only: a using join on them
+      if (l.df.isStreaming && r.df.isStreaming && nullableShared.isEmpty)
+        l.df.join(r.df, shared, "left_outer")
+      else {
+        requireEquiOnStreams(l, r, nullableShared)
+        merged(l.df.join(renamedRight(r.df), compatCond(shared, nullableShared), "left_outer"),
+          shared, rightOnly)
+      }
     // a shared var stays nullable only if the LEFT side could be UNDEF
     // (unmatched rows keep the left value); right-only vars always can
-    Bindings(out, l.maybeNull ++ rightOnly, stillEncoded)
+    Bindings(out, l.maybeNull ++ rightOnly, stillEncoded, keys)
   }
 
   /** FILTER [NOT] EXISTS (extension): set-based compatibility semi/anti
@@ -767,50 +811,96 @@ class Compiler(store: QuadStore,
     * (binding-substitution and the semi join coincide when the inner group
     * is itself built from compatibility joins). */
   def compatSemiJoin(l0: Bindings, r0: Bindings, anti: Boolean): Bindings = {
-    val shared0 = l0.df.columns.filter(r0.df.columns.contains(_)).toSet
-    val l = decode(l0, shared0.filterNot(r0.encoded))
-    val r = decode(r0, shared0.filterNot(l0.encoded))
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
+    val (l, r, shared) = aligned(l0, r0)
     val joinType = if (anti) "left_anti" else "left_semi"
     if (shared.isEmpty)
       // uncorrelated EXISTS: keep all rows iff the inner group is non-empty
-      return Bindings(l.df.join(r.df.limit(1), lit(true), joinType),
-        l.maybeNull, l.encoded)
-    val pre = "__graft_r_"
-    val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
+      return l.copy(df = l.df.join(r.df.limit(1), lit(true), joinType))
     val nullableShared = shared.filter(c => l.maybeNull(c) || r.maybeNull(c))
-    val cond = shared.map { c =>
-      if (nullableShared.contains(c))
-        col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-      else col(c) === col(pre + c)
-    }.reduce(_ && _)
-    Bindings(l.df.join(rr, cond, joinType), l.maybeNull, l.encoded)
+    if (l.df.isStreaming && r.df.isStreaming) {
+      requireEquiOnStreams(l, r, nullableShared)
+      return streamSemiJoin(l, r, shared, anti)
+    }
+    l.copy(df = l.df.join(renamedRight(r.df), compatCond(shared, nullableShared), joinType))
   }
 
   /** MINUS (extension, SPARQL 1.1 §8.3): drop left solutions compatible
     * with some right solution whose domain intersects the left's — i.e.
     * at least one shared var bound on BOTH sides; disjoint domains keep
-    * the row. A `left_anti` join; no shared vars at all = no-op. */
+    * the row. A `left_anti` join; no shared vars at all = no-op (keys are
+    * not variables). */
   def compatMinus(l0: Bindings, r0: Bindings): Bindings = {
-    val shared0 = l0.df.columns.filter(r0.df.columns.contains(_)).toSet
-    if (shared0.isEmpty) return l0
-    val l = decode(l0, shared0.filterNot(r0.encoded))
-    val r = decode(r0, shared0.filterNot(l0.encoded))
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
-    val pre = "__graft_r_"
-    val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
+    val (l, r, shared) = aligned(l0, r0)
+    val sharedVars = shared.filterNot(l.keys.contains)
+    if (sharedVars.isEmpty) return l
     val nullableShared = shared.filter(c => l.maybeNull(c) || r.maybeNull(c))
-    val compatible = shared.map { c =>
-      if (nullableShared.contains(c))
-        col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-      else col(c) === col(pre + c)
-    }.reduce(_ && _)
-    val domainsIntersect = shared.map { c =>
+    if (l.df.isStreaming && r.df.isStreaming) {
+      requireEquiOnStreams(l, r, nullableShared)
+      return streamSemiJoin(l, r, shared, anti = true)
+    }
+    val domainsIntersect = sharedVars.map { c =>
       col(c).isNotNull && col(pre + c).isNotNull
     }.reduce(_ || _)
-    Bindings(l.df.join(rr, compatible && domainsIntersect, "left_anti"),
-      l.maybeNull, l.encoded)
+    l.copy(df = l.df.join(renamedRight(r.df),
+      compatCond(shared, nullableShared) && domainsIntersect, "left_anti"))
   }
+
+  /** The operands of a compat operation, a shared var encoded on one side
+    * only decoded, and their shared columns. */
+  private def aligned(l0: Bindings, r0: Bindings): (Bindings, Bindings, Seq[String]) = {
+    val shared0 = l0.df.columns.filter(r0.df.columns.contains(_)).toSet
+    val l = decode(l0, shared0.filterNot(r0.encoded))
+    val r = decode(r0, shared0.filterNot(l0.encoded))
+    (l, r, l.df.columns.filter(r.df.columns.contains(_)).toSeq)
+  }
+
+  /** Prefix of the right side's columns in a conditional compat join. */
+  private val pre = "__graft_r_"
+
+  private def renamedRight(df: DataFrame): DataFrame =
+    df.columns.foldLeft(df)((d, c) => d.withColumnRenamed(c, pre + c))
+
+  /** Compatibility of a left row and a [[renamedRight]] row
+    * (`engine.rs:1137-1160`): equal on every shared column, where UNDEF on
+    * either side of a `nullable` one is compatible with anything. */
+  private def compatCond(shared: Seq[String], nullable: Seq[String]): Column =
+    shared.map { c =>
+      if (nullable.contains(c)) col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
+      else col(c) === col(pre + c)
+    }.reduce(_ && _)
+
+  /** A conditional compat join's output under the variables' own names:
+    * each shared var from whichever side bound it. */
+  private def merged(joined: DataFrame, shared: Seq[String], rightOnly: Seq[String]): DataFrame = {
+    var out = joined
+    shared.foreach { c =>
+      out = out.withColumn(c, coalesce(col(c), col(pre + c))).drop(pre + c)
+    }
+    rightOnly.foreach { c => out = out.withColumnRenamed(pre + c, c) }
+    out
+  }
+
+  /** Spark joins two streams on equality keys only, and the UNDEF-tolerant
+    * condition of a nullable shared variable has none. */
+  private def requireEquiOnStreams(l: Bindings, r: Bindings,
+      nullableShared: Seq[String]): Unit =
+    require(!(l.df.isStreaming && r.df.isStreaming) || nullableShared.isEmpty,
+      "a join of two streams on a variable that may be unbound (after OPTIONAL, " +
+        "a UNION branch or VALUES UNDEF) needs an UNDEF-tolerant condition, and " +
+        "Spark joins two streams on equality keys only; use the batch plane or RspEngine")
+
+  /** EXISTS, NOT EXISTS and MINUS of two streams on equality keys: Spark has
+    * no stream-stream anti join, so a watermarked `left_outer` against the
+    * right side's shared columns plus a marker keeps the left rows no right
+    * row matched (duplicate matches only multiply rows the marker drops). */
+  private def streamSemiJoin(l: Bindings, r: Bindings, shared: Seq[String],
+      anti: Boolean): Bindings =
+    if (!anti) l.copy(df = l.df.join(r.df, shared, "left_semi"))
+    else {
+      val marked = r.df.select((shared.map(col) :+ lit(1).as("__graft_minus_m")): _*)
+      l.copy(df = l.df.join(marked, shared, "left_outer")
+        .filter(col("__graft_minus_m").isNull).drop("__graft_minus_m"))
+    }
 
   // ---- expressions -------------------------------------------------------
 
@@ -962,7 +1052,7 @@ class Compiler(store: QuadStore,
 
   // ---- modifiers ---------------------------------------------------------
 
-  private[graft] def sortKeyCols(df: DataFrame, k: OrderKey): Column = {
+  private def sortKeyCols(df: DataFrame, k: OrderKey): Column = {
     val c = varCol(df, k.v)
     // numeric-if-parses-else-lexical total order (`execute_query.rs:477-499`):
     // struct sorts by (numeric value, lexical form)
@@ -1071,19 +1161,21 @@ class Compiler(store: QuadStore,
     // (numeric parse), so they decode pre-aggregation; GROUP BY keys stay
     // encoded through the shuffle and decode on the aggregated — usually
     // far smaller — result, together with whatever else reaches output
+    val keys = b0.keys
     var b = decode(b0, sel.aggregates.flatMap(_.v).toSet)
     if (sel.aggregates.nonEmpty || sel.groupBy.nonEmpty || having.nonEmpty)
-      b = Bindings(applyAggregates(b.df, sel), Set.empty,
+      b = Bindings(applyAggregates(b.df, sel, keys), Set.empty,
         b.encoded.intersect(sel.groupBy.toSet))
     b = decodeAll(b) // ORDER/DISTINCT/projection below see lexical values
     var df = b.df
     having.foreach(c => df = df.filter(compileCond(df, c)))
     if (synth.nonEmpty) df = df.drop(synth.map(_.alias).toSeq: _*)
     val projCols: Seq[String] =
-      if (sel.projection == Seq("*"))
-        df.columns.toSeq.filterNot(_.startsWith("__bnode_")) // non-projectable
+      if (sel.projection == Seq("*")) // blank nodes are non-projectable
+        df.columns.toSeq.filterNot(c => c.startsWith("__bnode_") || keys.contains(c))
       else sel.projection ++ sel0.aggregates.map(_.alias)
-    if (subquery) {
+    if (keys.nonEmpty) finalizePerKey(df, sel, keys, projCols)
+    else if (subquery) {
       df = df.select(projCols.map(c => varCol(df, c).as(c)): _*)
       if (sel.distinct) df = df.dropDuplicates()
       if (sel.orderBy.nonEmpty) df = df.orderBy(sel.orderBy.map(k => sortKeyCols(df, k)): _*)
@@ -1097,6 +1189,31 @@ class Compiler(store: QuadStore,
       sel.limit.foreach(n => df = df.limit(n))
       df.select(projCols.map(c => varCol(df, c).as(c)): _*)
     }
+  }
+
+  /** The modifiers of keyed solutions, each key's rows on their own:
+    * DISTINCT on the keys and projected variables, then ORDER BY with
+    * OFFSET/LIMIT as one rank partitioned by the keys (ORDER BY alone
+    * orders nothing in a relation), then the projection beside the keys. */
+  private def finalizePerKey(df0: DataFrame, sel: Select, keys: Seq[String],
+      projCols: Seq[String]): DataFrame = {
+    require(!df0.isStreaming,
+      "a subselect ranks and aggregates each key's complete rows, which an " +
+        "unbounded stream never completes")
+    require(sel.orderBy.nonEmpty || (sel.limit.isEmpty && sel.offset.isEmpty),
+      "LIMIT/OFFSET without ORDER BY keeps a nondeterministic subset of each " +
+        "key's rows; add an ORDER BY")
+    var df = df0
+    if (sel.distinct) df = df.dropDuplicates(keys ++ projCols.filter(df.columns.contains))
+    if (sel.orderBy.nonEmpty && (sel.limit.nonEmpty || sel.offset.nonEmpty)) {
+      val w = Window.partitionBy(keys.map(col): _*)
+        .orderBy(sel.orderBy.map(k => sortKeyCols(df, k)): _*)
+      val lo = sel.offset.getOrElse(0)
+      val hi = sel.limit.map(lo.toLong + _).getOrElse(Long.MaxValue)
+      df = df.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
+    }
+    df.select((keys.map(col) ++ projCols.map(c => varCol(df, c).as(c))): _*)
   }
 
   // ---- RETRIEVE (`parser.rs:3965-4010` process_retrieve_clause) ----------

@@ -3,16 +3,17 @@ package graft.streaming
 import graft.reasoner.Reasoner.RoundCheckpointOps
 import graft.reasoner.RuleBody
 import graft.reasoner.RuleBody.joinOnShared
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import graft.sparql.Compiler
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ExpiredTimerInfo}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sparql.Ast._
 
 /** Distributed RSP data plane (SURVEY §3.3 "Spark shape"): the
-  * full-semantics pipeline — CSPARQL window assignment, WINDOW-block BGP
-  * join, fired-close selection, R2S — expressed as DataFrame/Dataset
+  * full-semantics pipeline — CSPARQL window assignment, WINDOW-block
+  * evaluation, fired-close selection, R2S — expressed as DataFrame/Dataset
   * transformations that shuffle on (close, join vars) instead of
   * collecting each micro-batch to the driver. This is the scale path for
   * the category [[RspEngine]] serves as the exact-sequencing control
@@ -32,24 +33,29 @@ import graft.sparql.Ast._
   *    diffs consecutive firings, not consecutive step multiples), via a
   *    lag over the fired-close sequence — the one narrow global-window
   *    op, O(#closes) rows;
+  *  - WINDOW blocks, the static join and the per-close modifiers compile
+  *    through the same [[Compiler]] algebra the engine runs per firing,
+  *    keyed by close ([[Compiler.compileKeyed]]): every scan, path, union
+  *    branch and subselect carries `close`, every compat join joins on it,
+  *    and aggregates, DISTINCT and ORDER BY + LIMIT work per close;
   *  - empty firings are not representable as relation rows (an RSTREAM
   *    emission with zero rows appears as no rows here) — EXCEPT the
   *    global-aggregate case, where the engine's one zero-count row IS a
-  *    row and is unioned in ([[withEmptyFiringAggregates]], r6);
+  *    row and is unioned in ([[withEmptyFiringAggregates]]);
   *  - relations are SETS (the reference's R2R store semantics): a UNION
   *    whose branches match the same binding yields it once, where the
   *    engine's multiset emission would carry a duplicate row.
   *
-  * The streaming variants run the same stateless close-explode + BGP
-  * join over a watermarked stream, gate on a fired-close stream
+  * The streaming variants run the same stateless close-explode and keyed
+  * block compile over a watermarked stream, gate on a fired-close stream
   * (stream-stream left-semi join), and compute R2S incrementally in
   * `transformWithState` keyed by the binding ([[IncrementalR2S]]) with
   * per-key state = last close seen — the CQL dense-tick formulation,
   * identical to [[StreamOps]]'s batch step-arithmetic on feeds where
   * every step fires.
   *
-  * Scale posture: every join is an equi-join keyed by (close, vars) —
-  * parallel across closes AND across key ranges within a close; the only
+  * Scale posture: every join is keyed by (close, vars) — parallel across
+  * closes AND across key ranges within a close; the only
   * per-binding state is one (close, binding) pair in the state store.
   */
 class DistributedRsp(spark: SparkSession, val query: RspQuery,
@@ -89,21 +95,20 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     }, "distributed enrichment supports ground quoted terms only")
   }
 
-  private lazy val condCompiler =
-    new graft.sparql.Compiler(graft.model.QuadStore.empty(spark))
+  /** Compiles the WINDOW blocks over close-keyed content, the rules'
+    * filters and the modifiers; its own store is empty. */
+  private lazy val compiler = new Compiler(graft.model.QuadStore.empty(spark))
 
-  /** WINDOW-block elements per window IRI, validated against the surface
-    * the plane compiles: BGP, FILTER (scoped to the end of the enclosing
-    * group, as in [[graft.sparql.Compiler.compileGroup]]), UNION of
-    * such groups (branches binding different variable sets null-pad the
-    * missing vars, which then join UNDEF-tolerantly downstream),
-    * subselects (per-close modifiers — see
-    * [[compileSubSelectPerClose]]), and OPTIONAL / MINUS blocks
-    * anywhere after the first
-    * pattern — including nested OPTIONAL and patterns AFTER an OPTIONAL,
-    * compiled as UNDEF-tolerant compat joins (`engine.rs:1137-1160`
-    * discipline: null-tolerant equality only on vars that can actually
-    * be null, so null-free blocks keep their pure equi-join plans). */
+  /** WINDOW-block elements per window IRI. A block holds BGPs, FILTER
+    * (including [NOT] EXISTS), BIND, VALUES, property paths, UNION,
+    * OPTIONAL, MINUS and subselects, and compiles through the keyed
+    * [[Compiler]] with the engine's semantics. On the live plane the keyed
+    * compiler refuses what needs a close's complete rows — `+`/`*`
+    * closures, zero-length paths, subselects, a group that starts without
+    * a pattern — and a join of two streams on a variable that may be
+    * unbound (a pattern after OPTIONAL, a mixed-variable UNION), because
+    * Spark joins two streams on equality keys only. MINUS and NOT EXISTS
+    * run there as a watermarked `left_outer` plus a marker. */
   private val windowBlocks: Map[String, Seq[Element]] = {
     def validate(elems: Seq[Element]): Unit = elems.foreach {
       case Bgp(_) | FilterElem(_) | BindElem(_, _) | ValuesElem(_, _) |
@@ -209,7 +214,7 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
   private def rulePass(facts: DataFrame): DataFrame = {
     val keys = closeKeys(facts)
     rules.map(r => RuleBody.head(r,
-      RuleBody.body(r, facts, None, condCompiler.compileCond, keys), keys.map(col)))
+      RuleBody.body(r, facts, None, compiler.compileCond, keys), keys.map(col)))
       .reduce(_ unionByName _)
   }
 
@@ -232,17 +237,12 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
       "R2R enrichment did not reach its fixpoint within 32 rounds")
   }
 
-  /** The compiled WINDOW-block relation of `w`: pattern scans equi-joined
-    * on shared variables + close, distinct (the R2R store has set
-    * semantics). Registered rules enrich the content first. */
+  /** The compiled WINDOW-block relation of `w`: the block through the
+    * keyed [[graft.sparql.Compiler]] over the close-keyed content, distinct
+    * (the R2R store has set semantics). Registered rules enrich the
+    * content first. */
   def windowRelation(events: DataFrame, w: WindowSpec): DataFrame =
     windowRelation(events, w, firedCloses(events, w))
-
-  /** A block relation plus the set of variables that can be null (UNDEF)
-    * in it — nulls enter ONLY through OPTIONAL right-sides, so null-free
-    * blocks keep their pure equi-join plans (the maybeNull discipline of
-    * [[graft.sparql.Compiler.Bindings]], close-keyed). */
-  private case class BlockRel(df: DataFrame, maybeNull: Set[String])
 
   /** The plane's join keys: `close`, plus `closeTs` — the streaming
     * path's watermarked event-time twin of close — when present; keeping
@@ -250,386 +250,40 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
   private def closeKeys(df: DataFrame): Seq[String] =
     Seq("close") ++ (if (df.columns.contains("closeTs")) Seq("closeTs") else Nil)
 
-  /** UNDEF-tolerant compat join (`engine.rs:1137-1160`): equi on the close
-    * keys + null-free shared vars; a shared var that may be null on either
-    * side joins null-tolerantly (null compatible with anything) and the
-    * output coalesces both sides. Streaming frames never reach the
-    * null-tolerant branch (OPTIONAL right-sides are null-free and a
-    * nullable LEFT side is refused on the stream path below). */
-  private def compatInner(l: BlockRel, r: BlockRel): BlockRel = {
-    val ck = closeKeys(l.df)
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
-    val nullableShared = shared.diff(ck)
-      .filter(c => l.maybeNull(c) || r.maybeNull(c))
-    if (nullableShared.isEmpty)
-      BlockRel(l.df.join(r.df, shared, "inner"),
-        (l.maybeNull ++ r.maybeNull) -- shared)
-    else {
-      require(!l.df.isStreaming && !r.df.isStreaming,
-        "UNDEF-tolerant joins (patterns after OPTIONAL) run on the batch plane " +
-          "or RspEngine; Spark stream-stream joins need equality keys")
-      val pre = "__graft_r_"
-      val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
-      val cond = shared.map { c =>
-        if (nullableShared.contains(c))
-          col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-        else col(c) === col(pre + c)
-      }.reduce(_ && _)
-      var out = l.df.join(rr, cond, "inner")
-      shared.foreach { c =>
-        out = out.withColumn(c, coalesce(col(c), col(pre + c))).drop(pre + c)
-      }
-      r.df.columns.filterNot(shared.contains).foreach { c =>
-        out = out.withColumnRenamed(pre + c, c)
-      }
-      val stillNullable = (l.maybeNull ++ r.maybeNull).filter { v =>
-        if (shared.contains(v)) l.maybeNull(v) && r.maybeNull(v) else true
-      }
-      BlockRel(out, stillNullable)
-    }
-  }
-
-  /** OPTIONAL: left-preserving compat join; unmatched left rows pad the
-    * right-only vars with null, so those become maybeNull downstream. */
-  private def compatLeft(l: BlockRel, r: BlockRel): BlockRel = {
-    val ck = closeKeys(l.df)
-    val shared = l.df.columns.filter(r.df.columns.contains(_)).toSeq
-    val rightOnly = r.df.columns.filterNot(shared.contains).toSeq
-    val nullableShared = shared.diff(ck)
-      .filter(c => l.maybeNull(c) || r.maybeNull(c))
-    val joined =
-      if (nullableShared.isEmpty) l.df.join(r.df, shared, "left_outer")
-      else {
-        require(!l.df.isStreaming && !r.df.isStreaming,
-          "nested/post-OPTIONAL UNDEF-tolerant joins run on the batch plane " +
-            "or RspEngine; Spark stream-stream joins need equality keys")
-        val pre = "__graft_r_"
-        val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
-        val cond = shared.map { c =>
-          if (nullableShared.contains(c))
-            col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-          else col(c) === col(pre + c)
-        }.reduce(_ && _)
-        var out = l.df.join(rr, cond, "left_outer")
-        shared.foreach { c =>
-          out = out.withColumn(c, coalesce(col(c), col(pre + c))).drop(pre + c)
-        }
-        r.df.columns.filterNot(shared.contains).foreach { c =>
-          out = out.withColumnRenamed(pre + c, c)
-        }
-        out
-      }
-    BlockRel(joined, l.maybeNull ++ r.maybeNull ++ rightOnly)
-  }
-
-  /** MINUS (§8.3): drop a left row when a right row is compatible AND the
-    * two share at least one var bound in BOTH (per-row domain-intersection
-    * guard — the static guard is its null-free special case). */
-  private def minusJoin(l: BlockRel, r: BlockRel): BlockRel = {
-    val ck = closeKeys(l.df)
-    val sharedVars = l.df.columns.filter(r.df.columns.contains(_)).toSeq.diff(ck)
-    // no shared query variable → domains are disjoint → keep all
-    if (sharedVars.isEmpty) return l
-    val nullableShared = sharedVars.filter(c => l.maybeNull(c) || r.maybeNull(c))
-    if (nullableShared.isEmpty) {
-      if (l.df.isStreaming && r.df.isStreaming) {
-        // Spark has no stream-stream anti join, but the same watermarked
-        // close-keyed left_outer the trailing-OPTIONAL path uses emulates
-        // it: mark every compatible right row, keep left rows whose
-        // watermark expired with NO marker. Duplicate right matches only
-        // multiply rows that the null-marker filter drops anyway, so no
-        // stateful dedup of the right side is needed.
-        val marked = r.df.select(((ck ++ sharedVars).map(col) :+
-          lit(1).as("__graft_minus_m")): _*)
-        BlockRel(l.df.join(marked, ck ++ sharedVars, "left_outer")
-          .filter(col("__graft_minus_m").isNull).drop("__graft_minus_m"),
-          l.maybeNull)
-      } else
-        BlockRel(l.df.join(r.df, ck ++ sharedVars, "left_anti"), l.maybeNull)
-    } else {
-      require(!l.df.isStreaming,
-        "UNDEF-tolerant MINUS (nullable shared vars) runs on the batch " +
-          "plane or RspEngine; Spark stream-stream joins need equality keys")
-      val pre = "__graft_r_"
-      val rr = r.df.columns.foldLeft(r.df)((d, c) => d.withColumnRenamed(c, pre + c))
-      val compat = (ck.map(c => col(c) === col(pre + c)) ++ sharedVars.map { c =>
-        if (nullableShared.contains(c))
-          col(c).isNull || col(pre + c).isNull || (col(c) === col(pre + c))
-        else col(c) === col(pre + c)
-      }).reduce(_ && _)
-      val domShare = sharedVars.map(c => col(c).isNotNull && col(pre + c).isNotNull)
-        .reduce(_ || _)
-      BlockRel(l.df.join(rr, compat && domShare, "left_anti"), l.maybeNull)
-    }
-  }
-
-  /** Close-keyed property-path algebra (r6; was engine-only): the batch
-    * compiler's path → edge-relation mapping ([[graft.sparql.Compiler]]
-    * `pathEdges`) with the close keys riding every select/join/union, so
-    * one plan evaluates the path inside EVERY window close at once.
-    * Arbitrary-length forms (`+`/`*`) run the recursive-doubling closure
-    * GROUPED BY close (the close keys join through the squaring
-    * self-join) — batch plane only: a stream cannot loop a fixpoint, and
-    * zero-length identity needs the close's full node set. */
-  private def pathEdgesPerClose(content: DataFrame, p: Path): DataFrame = {
-    val ck = closeKeys(content)
-    def scanP(pred: String): DataFrame =
-      content.filter(col("p") === pred)
-        .select((ck.map(col) :+ col("s").as("__ps") :+ col("o").as("__po")): _*)
-    p match {
-      case PLink(i) => scanP(i)
-      case PInv(x) => pathEdgesPerClose(content, x)
-        .withColumnRenamed("__ps", "__tmp").withColumnRenamed("__po", "__ps")
-        .withColumnRenamed("__tmp", "__po")
-      case PSeq(l, r) =>
-        pathEdgesPerClose(content, l).withColumnRenamed("__po", "__m")
-          .join(pathEdgesPerClose(content, r).withColumnRenamed("__ps", "__m"),
-            ck :+ "__m", "inner")
-          .select((ck.map(col) :+ col("__ps") :+ col("__po")): _*)
-      case PAlt(l, r) =>
-        pathEdgesPerClose(content, l).unionByName(pathEdgesPerClose(content, r))
-      case PNeg(fwd, inv) =>
-        val all = content.select((ck.map(col) :+ col("s").as("__ps") :+
-          col("p").as("__pneg") :+ col("o").as("__po")): _*)
-        def without(not: Seq[String]) =
-          if (not.isEmpty) all else all.filter(!col("__pneg").isin(not: _*))
-        val sides =
-          (if (fwd.nonEmpty || inv.isEmpty)
-             Seq(without(fwd).select((ck.map(col) :+ col("__ps") :+ col("__po")): _*))
-           else Nil) ++
-          (if (inv.nonEmpty)
-             Seq(without(inv).select((ck.map(col) :+ col("__po").as("__ps") :+
-               col("__ps").as("__po")): _*))
-           else Nil)
-        sides.reduce(_ unionByName _)
-      case POneOrMore(x) => pathClosurePerClose(ck, pathEdgesPerClose(content, x))
-      case PZeroOrMore(x) =>
-        pathClosurePerClose(ck, pathEdgesPerClose(content, x))
-          .unionByName(pathIdentityPerClose(content)).distinct()
-      case PZeroOrOne(x) =>
-        pathEdgesPerClose(content, x)
-          .unionByName(pathIdentityPerClose(content)).distinct()
-    }
-  }
-
-  private def pathIdentityPerClose(content: DataFrame): DataFrame = {
-    require(!content.isStreaming,
-      "zero-length path identity needs each close's full node set; " +
-        "use the batch emissions or RspEngine on the live stream")
-    val ck = closeKeys(content)
-    content.select((ck.map(col) :+ col("s").as("__n")): _*)
-      .unionByName(content.select((ck.map(col) :+ col("o").as("__n")): _*))
-      .distinct()
-      .select((ck.map(col) :+ col("__n").as("__ps") :+ col("__n").as("__po")): _*)
-  }
-
-  /** Per-close transitive closure: recursive doubling with the close keys
-    * in every join — O(log max-diameter) rounds over ALL closes at once. */
-  private def pathClosurePerClose(ck: Seq[String], edges: DataFrame): DataFrame = {
-    require(!edges.isStreaming,
-      "arbitrary-length paths need a fixpoint; a micro-batch stream cannot " +
-        "loop — use the batch emissions or RspEngine")
-    // r12: checkpoint + convergence count fused into one action per round
-    var (r, n) = edges.distinct().localCheckpointSeveredCounted()
-    var done = false
-    while (!done) {
-      val (next, m) = r.unionByName(
-          r.withColumnRenamed("__po", "__m")
-            .join(r.withColumnRenamed("__ps", "__m"), ck :+ "__m", "inner")
-            .select((ck.map(col) :+ col("__ps") :+ col("__po")): _*))
-        .distinct().localCheckpointSeveredCounted()
-      done = m == n
-      n = m
-      val prev = r
-      r = next
-      graft.reasoner.Reasoner.unpersistCheckpoint(prev)
-    }
-    r
-  }
-
-  private def compilePathPerClose(content: DataFrame, s: Term, path: Path,
-      o: Term): BlockRel = {
-    val ck = closeKeys(content)
-    val e = pathEdgesPerClose(content, path)
-    var filters = List.empty[Column]
-    var binds = List.empty[(String, Column)]
-    def walkEnd(c: Column, t: Term): Unit = t match {
-      case Var(n) => binds ::= (n -> c)
-      case other => filters ::= (c === lit(graft.model.TermLex.lexical(other)))
-    }
-    walkEnd(col("__ps"), s); walkEnd(col("__po"), o)
-    val grouped = binds.reverse.groupBy(_._1)
-    val eqs = grouped.values.flatMap(cs => cs.tail.map(x => x._2 === cs.head._2))
-    val filtered = (filters ++ eqs).foldLeft(e)((d, f) => d.filter(f))
-    BlockRel(filtered.select((ck.map(col) ++
-      grouped.map { case (n, cs) => cs.head._2.as(n) }).toSeq: _*).distinct(),
-      Set.empty)
-  }
-
-  /** Per-close subselect (`engine.rs:416-426` materialize-then-join,
-    * close-scoped like every block element): the inner WHERE compiles
-    * over the same close-keyed content; aggregates group by (close keys ×
-    * GROUP BY vars) as ONE distributed aggregation across all closes;
-    * ORDER BY + LIMIT/OFFSET become a per-close rank (`row_number` over
-    * the close partition) — the CityBench per-window top-k shape as one
-    * distributed window function, no per-close loop. LIMIT without
-    * ORDER BY is refused (nondeterministic subset — the engine would
-    * emit an arbitrary one; a silent mismatch, not a compile target). */
-  private def compileSubSelectPerClose(content: DataFrame, sub0: Select): BlockRel = {
-    require(!content.isStreaming,
-      "WINDOW-block subselects rank/aggregate per close — not expressible " +
-        "over an unbounded stream; use the batch emissions or RspEngine")
-    require((sub0.limit.isEmpty && sub0.offset.isEmpty) || sub0.orderBy.nonEmpty,
-      "LIMIT/OFFSET without ORDER BY in a WINDOW-block subselect is " +
-        "nondeterministic; use RspEngine or add an ORDER BY")
-    val b = compileBlockRel(content, sub0.where)
-    val ck = closeKeys(b.df)
-    // HAVING via the batch compiler's synthetic-aggregate rewrite, close-keyed
-    val synth = scala.collection.mutable.ArrayBuffer.empty[graft.sparql.Ast.Aggregate]
-    val having = sub0.having.map(condCompiler.rewriteHaving(_, sub0.aggregates, synth))
-    val sub = if (synth.isEmpty) sub0
-      else sub0.copy(aggregates = sub0.aggregates ++ synth)
-    var df = b.df
-    if (sub.aggregates.nonEmpty || sub.groupBy.nonEmpty || having.nonEmpty)
-      df = condCompiler.applyAggregates(df, sub, ck)
-    having.foreach(c => df = df.filter(condCompiler.compileCond(df, c)))
-    if (synth.nonEmpty) df = df.drop(synth.map(_.alias).toSeq: _*)
-    val projCols: Seq[String] =
-      if (sub.projection == Seq("*")) df.columns.toSeq.filterNot(ck.contains)
-      else sub.projection ++ sub0.aggregates.map(_.alias)
-    // pad unbound projected vars with null, like finalizePerClose/the engine
-    df = df.select((ck ++ projCols).map(c =>
-      (if (df.columns.contains(c)) col(c)
-       else lit(null).cast(org.apache.spark.sql.types.StringType)).as(c)): _*)
-    if (sub.distinct) df = df.dropDuplicates()
-    if (sub.orderBy.nonEmpty && (sub.limit.nonEmpty || sub.offset.nonEmpty)) {
-      val w = Window.partitionBy(ck.map(col): _*)
-        .orderBy(sub.orderBy.map(k => condCompiler.sortKeyCols(df, k)): _*)
-      val lo = sub.offset.getOrElse(0)
-      val hi = sub.limit.map(l => lo.toLong + l).getOrElse(Long.MaxValue)
-      df = df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-    }
-    // aggregate aliases can be null (MAX over an all-unparsable group,
-    // padded unbound vars too) — they must join compat-tolerantly downstream
-    val nullableOut = b.maybeNull.intersect(projCols.toSet) ++
-      sub0.aggregates.map(_.alias).filter(projCols.contains) ++
-      projCols.filterNot(df.columns.contains)
-    BlockRel(df, nullableOut)
-  }
-
-  /** Compile one group of block elements over close-keyed content:
-    * BGPs scan+join, UNION branches (same variable set) union per close,
-    * OPTIONAL as a per-close compat left_outer join, MINUS as a per-close
-    * anti join with the §8.3 domain guard (emulated on the live plane as
-    * a watermarked left_outer + null-marker filter; only the UNDEF-
-    * tolerant variant stays batch-only), FILTERs defer to the end of the group
-    * (evaluating over the post-OPTIONAL frame, where a comparison on an
-    * unbound variable is null → dropped, SPARQL's error-is-false).
-    * Nested OPTIONALs and patterns after an OPTIONAL join UNDEF-
-    * tolerantly via the maybeNull discipline above. */
-  private def compileBlock(content: DataFrame, elems: Seq[Element]): DataFrame =
-    compileBlockRel(content, elems).df
-
-  private def compileBlockRel(content: DataFrame, elems: Seq[Element]): BlockRel = {
-    val (filterElems, others) = elems.partition(_.isInstanceOf[FilterElem])
-    var acc: Option[BlockRel] = None
-    def inner(r: BlockRel): Unit =
-      acc = Some(acc.map(compatInner(_, r)).getOrElse(r))
-    def leftSide(kind: String): BlockRel =
-      acc.getOrElse(throw new IllegalArgumentException(
-        s"$kind must follow a pattern element in its WINDOW block"))
-    others.foreach {
-      case Bgp(ps) =>
-        inner(BlockRel(ps.map(RuleBody.scan(content, _, closeKeys(content).map(col)))
-          .reduce(joinOnShared), Set.empty))
-      case UnionBlock(branches) =>
-        // SPARQL multiset union: branches may bind DIFFERENT variable
-        // sets — each branch null-pads the vars it does not bind, and
-        // those become maybeNull (UNDEF) downstream, where the compat
-        // joins above handle them (r6; was a loud refusal)
-        val rels = branches.map(compileBlockRel(content, _))
-        val allCols = rels.flatMap(_.df.columns).distinct
-        val padded = rels.map { r =>
-          val missing = allCols.filterNot(r.df.columns.contains)
-          BlockRel(missing.foldLeft(r.df)((d, c) =>
-            d.withColumn(c, lit(null).cast(org.apache.spark.sql.types.StringType))),
-            r.maybeNull ++ missing)
-        }
-        inner(BlockRel(padded.map(_.df.select(allCols.map(col): _*)).reduce(_ unionByName _),
-          padded.flatMap(_.maybeNull).toSet))
-      case OptionalBlock(optElems) =>
-        acc = Some(compatLeft(leftSide("OPTIONAL"), compileBlockRel(content, optElems)))
-      case MinusBlock(minusElems) =>
-        acc = Some(minusJoin(leftSide("MINUS"), compileBlockRel(content, minusElems)))
-      case SubSelect(sub) =>
-        inner(compileSubSelectPerClose(content, sub))
-      case BindElem(expr, v) =>
-        // per-row extension over the accumulated frame (batch Compiler's
-        // BIND discipline: error/unbound evaluates to null → maybeNull)
-        val base = leftSide("BIND")
-        acc = Some(BlockRel(
-          base.df.withColumn(v,
-            condCompiler.compileExpr(base.df, expr)
-              .cast(org.apache.spark.sql.types.StringType)),
-          base.maybeNull + v))
-      case ValuesElem(vars, vrows) =>
-        // inline data as a broadcast static relation: per-close rows join
-        // it on the shared vars (stream-static join on the live plane);
-        // UNDEF cells are nulls → maybeNull → compat machinery
-        val schema = org.apache.spark.sql.types.StructType(vars.map(v =>
-          org.apache.spark.sql.types.StructField(v,
-            org.apache.spark.sql.types.StringType, nullable = true)))
-        val data = vrows.map(r => org.apache.spark.sql.Row(
-          r.map(_.map(graft.model.TermLex.lexical).orNull): _*))
-        val vdf = broadcast(spark.createDataFrame(data.asJava, schema))
-        val undef = vars.zipWithIndex.filter { case (_, i) =>
-          vrows.exists(_(i).isEmpty)
-        }.map(_._1).toSet
-        inner(BlockRel(vdf, undef))
-      case PathPattern(ps, path, po) =>
-        inner(compilePathPerClose(content, ps, path, po))
-      case other => throw new IllegalArgumentException(s"unsupported block element $other")
-    }
-    val joined = acc.getOrElse(throw new IllegalArgumentException("empty WINDOW block"))
-    BlockRel(filterElems.collect { case FilterElem(c) => c }
-      .foldLeft(joined.df)((d, c) => d.filter(condCompiler.compileCond(d, c))),
-      joined.maybeNull)
-  }
-
   private def windowRelation(events: DataFrame, w: WindowSpec,
       fired: DataFrame): DataFrame = {
     val content0 = windowContent(events, w, fired)
     val content = if (rules.isEmpty) content0 else enrichFixpoint(content0)
-    compileBlock(content, windowBlocks(w.iri)).distinct()
+    compiler.compileKeyed(content, closeKeys(content), windowBlocks(w.iri)).df.distinct()
   }
 
   /** Static-plan bindings (`rsp_engine.rs:1012-1110` `emit_results`'s
     * natural join): the non-window elements compiled ONCE against the
     * static store. Computed lazily — queries without static elements pay
     * nothing. */
-  private lazy val staticBindings: Option[DataFrame] =
+  private lazy val staticBindings: Option[Compiler.Bindings] =
     if (staticElems.isEmpty) None
     else {
-      val c = new graft.sparql.Compiler(
-        staticStore.getOrElse(graft.model.QuadStore.empty(spark)))
-      val df = c.compileElements(staticElems).df
-      require(!df.columns.exists(n =>
+      val b = new Compiler(staticStore.getOrElse(graft.model.QuadStore.empty(spark)))
+        .compileElements(staticElems)
+      require(!b.df.columns.exists(n =>
           n == "close" || n == "closeTs" || n == IncrementalR2S.FiredMarker),
         "?close, ?closeTs and ?__fired__ are reserved column names on the distributed RSP plane")
-      Some(df)
+      Some(b)
     }
 
-  /** Join the windowed relation with the broadcast static plan on shared
-    * variables (cross join when none are shared — the engine's compat
-    * join does the same). */
+  /** The windowed relation compat-joined with the broadcast static plan,
+    * as [[RspEngine]]'s emission joins them: the window relation's
+    * variables bound, the static plan's OPTIONAL variables UNDEF-tolerant. */
   private def applyStatic(rel: DataFrame): DataFrame = staticBindings match {
     case None => rel
-    case Some(sdf) =>
-      val shared = rel.columns.filter(sdf.columns.contains(_)).toSeq
-      if (shared.isEmpty) rel.crossJoin(broadcast(sdf))
-      else rel.join(broadcast(sdf), shared, "inner")
+    case Some(static) =>
+      compiler.compatJoin(keyedRel(rel), static.copy(df = broadcast(static.df))).df
   }
+
+  /** A close-keyed relation of the plane as compiler bindings. */
+  private def keyedRel(rel: DataFrame): Compiler.Bindings =
+    Compiler.Bindings(rel, Set.empty, keys = closeKeys(rel))
 
   /** Fired closes of `w` with each close's TRIGGER — the min arrival ts
     * whose max-closing window is that close (the event whose advance
@@ -822,53 +476,6 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     applyStatic(win)
   }
 
-  /** Per-close solution modifiers, mirroring [[RspEngine.emitJoined]]'s
-    * `finalizeSelect` on each emission: aggregates (incl. HAVING via the
-    * batch compiler's synthetic-aggregate rewrite) group by (close keys ×
-    * GROUP BY vars) — one distributed aggregation across ALL closes —
-    * then projection, DISTINCT, and ORDER BY + LIMIT/OFFSET as a
-    * per-close rank (one `row_number` over the close partition; row
-    * ORDER itself is not represented — emissions are an unordered
-    * relation). The one non-representable case stays: a fired close with
-    * EMPTY content yields no row here, so a global aggregate over an
-    * empty firing (engine: one zero-count row) does not appear (class
-    * Scaladoc, "empty firings"). */
-  private def finalizePerClose(rel: DataFrame): DataFrame = {
-    val sel0 = query.select
-    val keys = Seq("close") ++
-      (if (rel.columns.contains("closeTs")) Seq("closeTs") else Nil)
-    val synth = scala.collection.mutable.ArrayBuffer.empty[graft.sparql.Ast.Aggregate]
-    val having = sel0.having.map(condCompiler.rewriteHaving(_, sel0.aggregates, synth))
-    val sel = if (synth.isEmpty) sel0
-      else sel0.copy(aggregates = sel0.aggregates ++ synth)
-    var df = rel
-    if (sel.aggregates.nonEmpty || sel.groupBy.nonEmpty || having.nonEmpty)
-      df = condCompiler.applyAggregates(df, sel, keys)
-    having.foreach(c => df = df.filter(condCompiler.compileCond(df, c)))
-    if (synth.nonEmpty) df = df.drop(synth.map(_.alias).toSeq: _*)
-    val projCols: Seq[String] =
-      if (sel.projection == Seq("*"))
-        df.columns.toSeq.filterNot(keys.contains)
-      else sel.projection ++ sel0.aggregates.map(_.alias)
-    // rank BEFORE projecting: the engine orders pre-projection
-    // (`finalizeSelect`, Compiler.scala), so ORDER BY may reference a
-    // variable the SELECT drops — projecting first would sort that key
-    // as a constant null and keep an arbitrary subset
-    if (sel.orderBy.nonEmpty && (sel.limit.nonEmpty || sel.offset.nonEmpty)) {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(sel.orderBy.map(k => condCompiler.sortKeyCols(df, k)): _*)
-      val lo = sel.offset.getOrElse(0)
-      val hi = sel.limit.map(l => lo.toLong + l).getOrElse(Long.MaxValue)
-      df = df.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-    }
-    df = df.select((keys ++ projCols).map(c =>
-      (if (df.columns.contains(c)) col(c)
-       else lit(null).cast(org.apache.spark.sql.types.StringType)).as(c)): _*)
-    if (sel.distinct) df = df.dropDuplicates()
-    df
-  }
-
   /** Fired-close sequence with its predecessor (lag over the ordered close
     * set — one narrow single-partition window over O(#closes) rows; at
     * scale #closes = timespan/step, not data volume). */
@@ -887,8 +494,8 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
   def emissions(events: DataFrame, advanceTo: Option[Long]): DataFrame = {
     query.kind match {
       case RStream =>
-        withEmptyFiringAggregates(events,
-          finalizePerClose(relation(events, advanceTo)))
+        withEmptyFiringAggregates(events, compiler.finalizeSelect(
+          keyedRel(relation(events, advanceTo)), query.select, subquery = false))
       case IStream =>
         // rows at close c absent from the relation at the previous fired
         // close (first firing: prev = null → nothing relabels → emit all)
@@ -923,34 +530,23 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
         val w = query.windows.head
         val missing = firedCloses(events, w)
           .join(rel.select("close").distinct(), Seq("close"), "left_anti")
-        val projCols = rel.columns.filter(_ != "close").toSeq
-        if (!projCols.forall(zeroRow.columns.contains)) rel // non-agg projection rode along
-        else rel.unionByName(
-          missing.crossJoin(zeroRow).select((Seq("close") ++ projCols).map(col): _*))
+        rel.unionByName(missing.crossJoin(zeroRow).select(rel.columns.map(col).toSeq: _*))
     }
 
-  /** The global aggregate's one-row frame over EMPTY bindings — with the
-    * synthetic-aggregate HAVING rewrite applied, exactly as
-    * [[finalizePerClose]] does for real rows (sharing this builder is
-    * what keeps the batch union and the live zero-fill from diverging).
-    * None when the shape doesn't qualify or HAVING filters the row out. */
+  /** The global aggregate's one-row frame: the query's modifiers over
+    * EMPTY bindings, through the same `finalizeSelect` as every emission
+    * (sharing it is what keeps the batch union and the live zero-fill
+    * from diverging). None when the shape doesn't qualify or HAVING
+    * filters the row out. */
   private lazy val globalZeroRowDf: Option[DataFrame] = {
-    val sel0 = query.select
-    if (query.windows.size != 1 || sel0.aggregates.isEmpty || sel0.groupBy.nonEmpty)
+    val sel = query.select
+    if (query.windows.size != 1 || sel.aggregates.isEmpty || sel.groupBy.nonEmpty)
       None
     else {
-      val synth = scala.collection.mutable.ArrayBuffer.empty[graft.sparql.Ast.Aggregate]
-      val having = sel0.having.map(condCompiler.rewriteHaving(_, sel0.aggregates, synth))
-      val sel = if (synth.isEmpty) sel0
-        else sel0.copy(aggregates = sel0.aggregates ++ synth)
-      val aggVars = sel.aggregates.flatMap(_.v).distinct
-      val schema = org.apache.spark.sql.types.StructType(aggVars.map(v =>
-        org.apache.spark.sql.types.StructField(v, org.apache.spark.sql.types.StringType)))
-      var zeroRow = condCompiler.applyAggregates(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-        sel, Nil)
-      having.foreach(c => zeroRow = zeroRow.filter(condCompiler.compileCond(zeroRow, c)))
-      if (synth.nonEmpty) zeroRow = zeroRow.drop(synth.map(_.alias).toSeq: _*)
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(sel.aggregates.flatMap(_.v).distinct.map(StructField(_, StringType))))
+      val zeroRow = compiler.finalizeSelect(Compiler.Bindings(empty, Set.empty), sel,
+        subquery = false)
       if (zeroRow.isEmpty) None else Some(zeroRow)
     }
   }
@@ -1014,8 +610,9 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
       val fired = firedCloses(events, w).localCheckpoint()
       // the diff runs over the FINALIZED relation (incl. the static join) —
       // the engine also diffs emission rows after modifiers, not raw bindings
-      (diffRelCheckpoint(finalizePerClose(applyStatic(windowRelation(events, w, fired)))),
-        fired)
+      (diffRelCheckpoint(compiler.finalizeSelect(
+        keyedRel(applyStatic(windowRelation(events, w, fired))), query.select,
+        subquery = false)), fired)
     } else {
       // multi-window: the engine diffs CONSECUTIVE Wait-cycle emissions,
       // so the fired sequence for the lag is the emission schedule and the
@@ -1027,7 +624,8 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
           "WITH POLICY steal/timeout R2S uses RspEngine")
       val perWindow = checkpointedPerWindow(events)
       val emis = waitEmissionCloses(perWindow.map(_._2)).localCheckpoint()
-      (diffRelCheckpoint(finalizePerClose(applyStatic(asOfJoined(perWindow, emis)))),
+      (diffRelCheckpoint(compiler.finalizeSelect(
+        keyedRel(applyStatic(asOfJoined(perWindow, emis))), query.select, subquery = false)),
         emis.withColumnRenamed("__c", "close"))
     }
   }
@@ -1149,7 +747,7 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
         (facts, _) =>
           facts.unionByName(rulePass(facts))
       }
-    compileBlock(enriched, windowBlocks(w.iri))
+    compiler.compileKeyed(enriched, closeKeys(enriched), windowBlocks(w.iri)).df
   }
 
   /** Watermark delay: RANGE+STEP covers the skew between an arrival's ts
@@ -1207,15 +805,15 @@ class DistributedRsp(spark: SparkSession, val query: RspQuery,
     // over finalized rows — same synthetic-aggregate rewrite as the batch
     // plane (r6; was a loud refusal alongside LIMIT)
     val synth = scala.collection.mutable.ArrayBuffer.empty[graft.sparql.Ast.Aggregate]
-    val having = sel0.having.map(condCompiler.rewriteHaving(_, sel0.aggregates, synth))
+    val having = sel0.having.map(compiler.rewriteHaving(_, sel0.aggregates, synth))
     val sel = if (synth.isEmpty) sel0
       else sel0.copy(aggregates = sel0.aggregates ++ synth)
     val finalized = {
       var df =
         if (sel.aggregates.nonEmpty || sel.groupBy.nonEmpty || having.nonEmpty)
-          condCompiler.applyAggregates(relAll, sel, keys)
+          compiler.applyAggregates(relAll, sel, keys)
         else nonAggFinalize(relAll, sel, keys)
-      having.foreach(c => df = df.filter(condCompiler.compileCond(df, c)))
+      having.foreach(c => df = df.filter(compiler.compileCond(df, c)))
       if (synth.nonEmpty) df = df.drop(synth.map(_.alias).toSeq: _*)
       df
     }

@@ -1634,4 +1634,56 @@ class DistributedRspSpec extends SparkSpec {
         s"dstream: extra=${incDGated -- wantD}, missing=${wantD -- incDGated}")
     }
   }
+
+  private def oneWindow(select: String, block: String, static: String = "",
+      modifiers: String = "") = s"""
+    REGISTER RSTREAM <http://out/parity> AS
+    SELECT $select
+    FROM NAMED WINDOW :w ON ?stream [RANGE 3 ms STEP 1 ms]
+    WHERE { WINDOW :w { $block } $static } $modifiers"""
+
+  test("outer DISTINCT deduplicates before the per-close LIMIT (engine parity)") {
+    val q = oneWindow("DISTINCT ?u", "?e <by> ?u", modifiers = "ORDER BY ?u LIMIT 2")
+    val feed = Seq(("e1", "by", "alice", 1L), ("e2", "by", "alice", 1L),
+      ("e3", "by", "bob", 1L), ("t", "tick", "t", 2L))
+    val engine = PlaneRows.engine(spark, q, feed)
+    assert(engine == Map(1L -> Set(Map("u" -> "alice"), Map("u" -> "bob"))), s"engine $engine")
+    assert(PlaneRows.batch(spark, q, feed) == engine)
+  }
+
+  test("FILTER [NOT] EXISTS inside a WINDOW block matches the engine (batch + live)") {
+    val feed = Seq(("e1", "by", "alice", 1L), ("e1", "tag", "vip", 1L),
+      ("e2", "by", "bob", 1L), ("t", "tick", "t", 2L))
+    val exists = oneWindow("?e", "?e <by> ?u . FILTER EXISTS { ?e <tag> ?t }")
+    val engine = PlaneRows.engine(spark, exists, feed)
+    assert(engine == Map(1L -> Set(Map("e" -> "e1"))), s"engine $engine")
+    assert(PlaneRows.batch(spark, exists, feed) == engine)
+    assert(PlaneRows.live(spark, exists, feed) == engine)
+    val notExists = oneWindow("?e", "?e <by> ?u . FILTER NOT EXISTS { ?e <tag> ?t }")
+    val engineNot = PlaneRows.engine(spark, notExists, feed)
+    assert(engineNot == Map(1L -> Set(Map("e" -> "e2"))), s"engine $engineNot")
+    assert(PlaneRows.batch(spark, notExists, feed) == engineNot)
+    assert(PlaneRows.live(spark, notExists, feed) == engineNot)
+  }
+
+  test("a zero-length path reaches a ground endpoint absent from the window (engine parity)") {
+    val q = oneWindow("*", "?x <knows>* <zed>")
+    val feed = Seq(("a", "knows", "b", 1L), ("b", "knows", "c", 1L), ("t", "tick", "t", 2L))
+    val engine = PlaneRows.engine(spark, q, feed)
+    assert(engine == Map(1L -> Set(Map("x" -> "zed"))), s"engine $engine")
+    assert(PlaneRows.batch(spark, q, feed) == engine)
+  }
+
+  test("the static join keeps OPTIONAL's UNDEF, as the engine's compat join does (batch + live)") {
+    val static = graft.model.QuadStore.fromTriples(spark, Seq(
+      ("s1", "inRoom", "r1"), ("s2", "inRoom", "r2"), ("s2", "label", "L2")))
+    val q = oneWindow("*", "?s <reads> ?l", "?s <inRoom> ?r . OPTIONAL { ?s <label> ?l }")
+    val feed = Seq(("s1", "reads", "v1", 1L), ("s2", "reads", "L2", 1L), ("t", "tick", "t", 2L))
+    val engine = PlaneRows.engine(spark, q, feed, Some(static))
+    assert(engine == Map(1L -> Set(
+      Map("s" -> "s1", "l" -> "v1", "r" -> "r1"),
+      Map("s" -> "s2", "l" -> "L2", "r" -> "r2"))), s"engine $engine")
+    assert(PlaneRows.batch(spark, q, feed, Some(static)) == engine)
+    assert(PlaneRows.live(spark, q, feed, Some(static)) == engine)
+  }
 }
